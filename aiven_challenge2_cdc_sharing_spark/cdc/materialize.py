@@ -101,8 +101,10 @@ def merge_state(
 ) -> DataFrame:
     """Incremental maintenance of a ``latest_state`` table: both sides
     carry metadata (incl. tombstones), so merging is closed under
-    arbitrary batch boundaries, replay, and reordering."""
-    return latest_state(state.unionByName(batch.select(*state.columns)),
+    arbitrary batch boundaries, replay, and reordering.  The result has
+    the columns of both sides: a column the batch adds is NULL for the
+    state's rows, one it lacks is NULL for its own."""
+    return latest_state(state.unionByName(batch, allowMissingColumns=True),
                         key_cols, order_cols)
 
 

@@ -54,7 +54,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from .runtime import merge_snapshot_batch, read_snapshot
+from .runtime import local_path, merge_snapshot_batch, read_snapshot
 
 
 def _publish_atomic(
@@ -67,7 +67,7 @@ def _publish_atomic(
     scheme if present.  Keeps the CURRENT and PREVIOUS versions on
     disk, removing older ones only after the swap succeeds.
     """
-    root = base_dir[5:] if base_dir.startswith("file:") else base_dir
+    root = local_path(base_dir)
     vroot = os.path.join(root, ".versions")
     os.makedirs(vroot, exist_ok=True)
     vdir = os.path.join(vroot, f"{name}_v{batch_id}")
@@ -107,8 +107,9 @@ def run_shared_serving(
     def fanout(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         merge_snapshot_batch(batch_df, f"{base_dir}/state", n_buckets)
+        # lazy: the first publish materializes it, the second reuses it
         snap = read_snapshot(spark, f"{base_dir}/state").localCheckpoint(
-            eager=True
+            eager=False
         )
         _publish_atomic(
             snap.groupBy("classification")

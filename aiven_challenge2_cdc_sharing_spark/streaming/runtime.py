@@ -21,11 +21,13 @@ semantics too.
 
 from __future__ import annotations
 
+import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 from ..cdc.algebra import unwrap
 from ..cdc.materialize import latest_state, merge_state, published_snapshot
@@ -50,40 +52,88 @@ def envelope_file_stream(spark: SparkSession, events_dir: str) -> DataFrame:
 
 N_SNAPSHOT_BUCKETS = 16
 
+# the state schema recorded beside the state table after each write; the
+# leading ``_`` keeps it out of Spark's file listing
+STATE_SCHEMA_FILE = "_state_schema.json"
+
+
+def local_path(path: str) -> str:
+    """``path`` as a local filesystem path: a ``file:`` URI loses its
+    scheme (Python's ``os`` functions take no URIs, Spark takes both)."""
+    return path[len("file:"):] if path.startswith("file:") else path
+
+
+def _state_reader(spark: SparkSession, snapshot_path: str) -> DataFrameReader:
+    """``spark.read`` carrying the state schema recorded at the last
+    write; a table with no record (written before the record was kept)
+    falls back to inference."""
+    try:
+        with open(os.path.join(local_path(snapshot_path), STATE_SCHEMA_FILE)) as f:
+            return spark.read.schema(StructType.fromJson(json.load(f)))
+    except FileNotFoundError:
+        return spark.read
+
+
+def _record_state_schema(snapshot_path: str, schema: StructType) -> None:
+    path = os.path.join(local_path(snapshot_path), STATE_SCHEMA_FILE)
+    tmp = f"{path}.tmp"
+    with open(tmp, "w") as f:
+        f.write(schema.json())
+    os.replace(tmp, path)
+
 
 def merge_snapshot_batch(
     batch_df: DataFrame, snapshot_path: str, n_buckets: int
 ) -> None:
     """One micro-batch's idempotent state merge (the body of
     ``run_snapshot_maintenance``, reusable from multi-sink pipelines):
-    unwrap, bucket by key hash, rewrite only touched buckets."""
+    unwrap, bucket by key hash, rewrite only touched buckets.
+
+    Columns an envelope adds mid-stream widen the state: keys last
+    written before the column arrived read it as NULL.  After each
+    write the state schema is recorded in ``STATE_SCHEMA_FILE`` inside
+    the table (through a temp file and ``os.replace``); the prior-bucket
+    read and ``read_snapshot`` pass it to ``spark.read.schema``, which
+    spares them Spark's schema-inference job and makes an added column
+    visible even when the one footer inference reads predates it.  A
+    table with no record falls back to inference.  The record is
+    written after the data commit: a crash between the two leaves the
+    old record, and the replayed batch restores the columns it adds.
+
+    No checkpoint precedes the write, although the merged state reads
+    the buckets it overwrites: dynamic partition overwrite stages the
+    new files and swaps the buckets only at job commit, after every
+    read of the prior files has finished.
+    """
     spark = batch_df.sparkSession
     changes = unwrap(batch_df).withColumn(
         "__bucket",
         F.pmod(F.xxhash64(F.col("id")), F.lit(n_buckets)).cast("int"),
     )
-    # pin: consumed twice (touched-bucket probe + merge) and the
-    # merge output overwrites a table we read below
-    changes = changes.localCheckpoint(eager=True)
+    # pin: consumed twice (touched-bucket probe + merge); lazy, so the
+    # probe's own job materializes it instead of an extra count job
+    changes = changes.localCheckpoint(eager=False)
     touched = [
         r["__bucket"] for r in changes.select("__bucket").distinct().collect()
     ]
     if not touched:
         return
-    if os.path.exists(snapshot_path):
-        prior = spark.read.parquet(snapshot_path).filter(
-            F.col("__bucket").isin(touched)
+    if os.path.exists(local_path(snapshot_path)):
+        prior = (
+            _state_reader(spark, snapshot_path)
+            .parquet(snapshot_path)
+            .filter(F.col("__bucket").isin(touched))
         )
         state = merge_state(prior, changes)
     else:
         state = latest_state(changes)
     (
-        state.localCheckpoint(eager=True)
-        .write.mode("overwrite")
+        state.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("__bucket")
         .parquet(snapshot_path)
     )
+    _record_state_schema(snapshot_path, state.schema)
 
 
 def run_snapshot_maintenance(
@@ -119,6 +169,12 @@ def run_snapshot_maintenance(
     executor's comfortable rewrite unit; a micro-batch with uniformly
     random keys touches every bucket (worst case = full rewrite, same
     as round 1), but real CDC batches are small and key-local.
+
+    Each write records the state schema in ``STATE_SCHEMA_FILE`` inside
+    the table; reads of the table use it instead of a schema-inference
+    job, and tables with no record fall back to inference.  No
+    checkpoint precedes the bucket overwrite (``merge_snapshot_batch``
+    says why that is safe).
     """
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         merge_snapshot_batch(batch_df, snapshot_path, n_buckets)
@@ -134,8 +190,14 @@ def run_snapshot_maintenance(
 
 
 def read_snapshot(spark: SparkSession, snapshot_path: str) -> DataFrame:
-    """User-facing current state from a maintained state table."""
-    return published_snapshot(spark.read.parquet(snapshot_path)).drop("__bucket")
+    """User-facing current state from a maintained state table.
+
+    Reads with the schema ``merge_snapshot_batch`` recorded, so the
+    read plans without a schema-inference job and shows every column
+    the state has gained; a table with no record falls back to
+    inference."""
+    state = _state_reader(spark, snapshot_path).parquet(snapshot_path)
+    return published_snapshot(state).drop("__bucket")
 
 
 def windowed_counts(
