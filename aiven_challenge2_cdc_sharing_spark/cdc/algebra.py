@@ -110,6 +110,35 @@ def to_wire(unwrapped: DataFrame, n_partitions: int = N_WIRE_PARTITIONS) -> Data
     return records.unionByName(tombstones)
 
 
+# the flattened payload columns, in row order; ``id`` comes from the key
+_PAYLOAD = [f.name for f in CDC_WIRE_VALUE.fields if f.name not in ("id", "__deleted")]
+
+
+def _parse_wire(wire: DataFrame) -> DataFrame:
+    """The one schema-on-read parse of the wire shape: key and value
+    structs beside the raw JSON they came from."""
+    return wire.select(
+        F.from_json("key_json", CDC_WIRE_KEY).alias("k"),
+        F.from_json("value_json", CDC_WIRE_VALUE).alias("v"),
+        "key_json",
+        "value_json",
+        "offset",
+    )
+
+
+def _wire_rows(parsed: DataFrame) -> DataFrame:
+    """Parsed wire records -> flattened rows + ``__deleted`` + ``offset``."""
+    deleted = F.col("value_json").isNull() | F.coalesce(
+        F.col("v.__deleted") == "true", F.lit(False)
+    )
+    return parsed.select(
+        F.col("k.id").alias("id"),
+        *[F.col(f"v.{c}").alias(c) for c in _PAYLOAD],
+        deleted.alias("__deleted"),
+        "offset",
+    )
+
+
 def from_wire(wire: DataFrame) -> DataFrame:
     """S3 — schema-on-read of the wire shape back into flattened rows.
 
@@ -117,25 +146,7 @@ def from_wire(wire: DataFrame) -> DataFrame:
     become delete markers carrying only the key; the id always comes from
     the parsed key struct (fixing latent bug B).
     """
-    parsed = wire.select(
-        F.from_json("key_json", CDC_WIRE_KEY).alias("k"),
-        F.from_json("value_json", CDC_WIRE_VALUE).alias("v"),
-        F.col("value_json").isNull().alias("is_tombstone"),
-        F.col("offset"),
-    )
-    return parsed.select(
-        F.col("k.id").alias("id"),
-        F.col("v.full_name").alias("full_name"),
-        F.col("v.email").alias("email"),
-        F.col("v.phone").alias("phone"),
-        F.col("v.classification").alias("classification"),
-        F.col("v.created_at").alias("created_at"),
-        (
-            F.col("is_tombstone")
-            | F.coalesce(F.col("v.__deleted") == "true", F.lit(False))
-        ).alias("__deleted"),
-        F.col("offset"),
-    )
+    return _wire_rows(_parse_wire(wire))
 
 
 def from_wire_quarantine(wire: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -147,34 +158,12 @@ def from_wire_quarantine(wire: DataFrame) -> tuple[DataFrame, DataFrame]:
     *parseable key with garbage payload* would overwrite good state on
     MERGE.  Tombstones (value IS NULL) remain valid records.
     """
-    parsed = wire.select(
-        F.from_json("key_json", CDC_WIRE_KEY).alias("k"),
-        F.from_json("value_json", CDC_WIRE_VALUE).alias("v"),
-        F.col("value_json").isNull().alias("is_tombstone"),
-        F.col("key_json"),
-        F.col("value_json"),
-        F.col("offset"),
-    )
-    bad = (
-        F.col("k").isNull()
-        | F.col("k.id").isNull()
-        | (~F.col("is_tombstone") & F.col("v.id").isNull())
+    parsed = _parse_wire(wire)
+    bad = F.col("k.id").isNull() | (
+        F.col("value_json").isNotNull() & F.col("v.id").isNull()
     )
     quarantined = parsed.filter(bad).select("key_json", "value_json", "offset")
-    good = parsed.filter(~bad).select(
-        F.col("k.id").alias("id"),
-        F.col("v.full_name").alias("full_name"),
-        F.col("v.email").alias("email"),
-        F.col("v.phone").alias("phone"),
-        F.col("v.classification").alias("classification"),
-        F.col("v.created_at").alias("created_at"),
-        (
-            F.col("is_tombstone")
-            | F.coalesce(F.col("v.__deleted") == "true", F.lit(False))
-        ).alias("__deleted"),
-        F.col("offset"),
-    )
-    return good, quarantined
+    return _wire_rows(parsed.filter(~bad)), quarantined
 
 
 def route_ops(unwrapped: DataFrame) -> tuple[DataFrame, DataFrame]:

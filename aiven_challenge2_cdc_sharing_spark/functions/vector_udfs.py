@@ -17,22 +17,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def make_cosine_udf(query_vec: list[float]):
-    """Scalar pandas_udf: cosine similarity of every row's embedding
-    against a fixed query vector.  One numpy matmul per Arrow batch —
-    the classic 10-100x win over per-row Python."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = np.linalg.norm(q)
-
-    @F.pandas_udf(T.DoubleType())
-    def cosine_to_query(emb: pd.Series) -> pd.Series:
-        mat = np.stack(emb.apply(lambda v: np.asarray(v, dtype=np.float64)))
-        sims = (mat @ q) / (np.linalg.norm(mat, axis=1) * qn)
-        return pd.Series(sims)
-
-    return cosine_to_query
-
-
 @F.pandas_udf(T.DoubleType())
 def pairwise_cosine(a: pd.Series, b: pd.Series) -> pd.Series:
     """Two-column scalar pandas_udf: row-wise cosine(a_i, b_i) for a

@@ -37,18 +37,12 @@ from pyspark.sql.datasource import (
     EqualTo,
     InputPartition,
 )
+from pyspark.sql.types import StructType
+
+from ..schemas import CDC_ENVELOPE
 
 BASE_EPOCH = 1_704_067_200  # 2024-01-01 00:00:00 UTC, same as generator.py
 BASE_MS = BASE_EPOCH * 1000
-
-ENVELOPE_DDL = (
-    "op string, "
-    "before struct<id:int,full_name:string,email:string,phone:string,"
-    "classification:string,created_at:timestamp>, "
-    "after struct<id:int,full_name:string,email:string,phone:string,"
-    "classification:string,created_at:timestamp>, "
-    "ts_ms bigint, source_table string, seq bigint"
-)
 
 
 class IdRangePartition(InputPartition):
@@ -169,8 +163,8 @@ class CdcEnvelopeDataSource(DataSource):
     def name(cls) -> str:
         return "cdc_envelope"
 
-    def schema(self) -> str:
-        return ENVELOPE_DDL
+    def schema(self) -> StructType:
+        return CDC_ENVELOPE
 
     def reader(self, schema) -> CdcEnvelopeReader:
         return CdcEnvelopeReader(self.options)

@@ -19,14 +19,13 @@ from .runtime import (
     run_snapshot_maintenance,
     windowed_counts,
 )
-from .sinks import make_exactly_once_sink, write_once_per_batch
+from .sinks import write_once_per_batch
 from .stateful import running_user_profiles
 
 __all__ = [
     "apply_agg_deltas",
     "classification_deltas",
     "envelope_file_stream",
-    "make_exactly_once_sink",
     "peek_one",
     "progress_summary",
     "read_snapshot",

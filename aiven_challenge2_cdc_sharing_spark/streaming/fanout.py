@@ -41,8 +41,13 @@ immutable version.  The previous version is retained one batch (a
 reader that resolved the link just before the swap can finish its
 scan) and garbage-collected after.  On an object store, the same
 contract is a versioned prefix plus a small ``_LATEST`` manifest
-written via put-then-rename; the state table already gets this
-atomicity from dynamic partition overwrite.
+written via put-then-rename.  The state table has no such swap yet.
+Dynamic partition overwrite stages the new files and moves them in at
+job commit, so no file is ever seen half-written; but it replaces the
+touched buckets one at a time (delete the directory, then rename the
+staged one in), and a reader in that window misses a whole bucket or
+fails on a file deleted under it.  ROADMAP.md direction 1 (commit the
+state through a versioned manifest) is the fix.
 """
 
 from __future__ import annotations
@@ -54,7 +59,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from .runtime import local_path, merge_snapshot_batch, read_snapshot
+from .runtime import (
+    N_SNAPSHOT_BUCKETS,
+    local_path,
+    merge_snapshot_batch,
+    read_snapshot,
+)
 
 
 def _publish_atomic(
@@ -63,9 +73,9 @@ def _publish_atomic(
     """Write ``df`` as ``base_dir/name`` with an atomic symlink swap.
 
     Local-filesystem implementation of the versioned-publish contract
-    (this repo's streaming sinks are file-based); strips a ``file:``
-    scheme if present.  Keeps the CURRENT and PREVIOUS versions on
-    disk, removing older ones only after the swap succeeds.
+    (this repo's streaming sinks are file-based).  Keeps the CURRENT
+    and PREVIOUS versions on disk, removing older ones only after the
+    swap succeeds.
     """
     root = local_path(base_dir)
     vroot = os.path.join(root, ".versions")
@@ -97,7 +107,7 @@ def run_shared_serving(
     envelopes: DataFrame,
     base_dir: str,
     checkpoint_path: str,
-    n_buckets: int = 16,
+    n_buckets: int = N_SNAPSHOT_BUCKETS,
 ) -> StreamingQuery:
     """Start the one-pass fan-out; returns the streaming query.
 

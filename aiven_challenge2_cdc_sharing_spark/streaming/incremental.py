@@ -26,21 +26,19 @@ against it before computing deltas.
 Crash-atomicity between the counts write and the processed-log write is
 MVCC-lite: each micro-batch stages BOTH under a version named
 ``<run>-<batch_id>`` (``counts/v=...``, ``processed/b=...``) and then
-commits by appending one line to ``_commitlog``; readers and later
-batches only ever see committed versions, so a crash between the
-staging writes leaves orphan directories that the replayed batch simply
-overwrites — never a half-applied state (the manifest-pointer idea
-Delta/Iceberg use, minus compaction).  Versions are scoped by a run id
+commits by atomically rewriting ``_commitlog`` with one more line
+(``runtime.replace_file``); readers and later batches only ever see
+committed versions, so a crash between the staging writes leaves
+orphan directories that the replayed batch simply overwrites — never
+a half-applied state (the manifest-pointer idea Delta/Iceberg use,
+minus compaction).  Versions are scoped by a run id
 derived from the checkpoint location because batch_ids RESTART at 0
 when a checkpoint is lost: a same-run replay (identical batch content,
 guaranteed by Structured Streaming) is skipped via the log, while a
 new run never matches an old version name and instead deduplicates at
 the event level through the processed log — the layer that makes
-checkpoint-loss replay exact.  The commit log lives on the
-driver-local filesystem (same assumption as
-``sinks.write_once_per_batch``; on HDFS/S3 route it through the Hadoop
-FileSystem API).  At scale the per-batch processed dirs are bounded by
-watermark retention and periodically compacted.
+checkpoint-loss replay exact.  At scale the per-batch processed dirs
+are bounded by watermark retention and periodically compacted.
 """
 
 from __future__ import annotations
@@ -49,6 +47,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .runtime import local_path, replace_file
+
+COMMIT_LOG = "_commitlog"
 
 
 def classification_deltas(envelopes: DataFrame) -> DataFrame:
@@ -83,11 +85,17 @@ def apply_agg_deltas(counts: DataFrame, deltas: DataFrame) -> DataFrame:
 
 
 def _committed_versions(state_path: str) -> list[str]:
-    log_path = os.path.join(state_path, "_commitlog")
-    if not os.path.exists(log_path):
+    try:
+        with open(os.path.join(local_path(state_path), COMMIT_LOG)) as f:
+            return f.read().split()
+    except FileNotFoundError:
         return []
-    with open(log_path) as f:
-        return [line.strip() for line in f if line.strip()]
+
+
+def _commit(state_path: str, versions: list[str]) -> None:
+    replace_file(
+        os.path.join(state_path, COMMIT_LOG), "".join(f"{v}\n" for v in versions)
+    )
 
 
 def read_counts(spark: SparkSession, state_path: str) -> DataFrame:
@@ -103,9 +111,9 @@ def read_counts(spark: SparkSession, state_path: str) -> DataFrame:
 def compact_state(spark: SparkSession, state_path: str) -> int:
     """Compact the committed history into one version: union all
     committed processed dirs into a single dir, carry the latest counts
-    forward, and atomically swap the commit log (write + os.replace) to
-    reference just the compacted version.  Old dirs become orphans
-    (best-effort removed) — a crash anywhere before the log swap leaves
+    forward, and atomically swap the commit log to reference just the
+    compacted version.  Old dirs become orphans (best-effort removed)
+    — a crash anywhere before the log swap leaves
     the previous log intact and the new dirs ignored, preserving the
     protocol's invariant that readers only see committed versions.
 
@@ -128,17 +136,11 @@ def compact_state(spark: SparkSession, state_path: str) -> int:
     read_counts(spark, state_path).write.mode("overwrite").parquet(
         os.path.join(state_path, "counts", f"v={compact_v}")
     )
-    tmp = os.path.join(state_path, "_commitlog.tmp")
-    with open(tmp, "w") as f:
-        f.write(compact_v + "\n")
-    os.replace(tmp, os.path.join(state_path, "_commitlog"))
+    _commit(state_path, [compact_v])
+    root = local_path(state_path)
     for v in versions:  # best-effort orphan cleanup
-        shutil.rmtree(
-            os.path.join(state_path, "processed", f"b={v}"), ignore_errors=True
-        )
-        shutil.rmtree(
-            os.path.join(state_path, "counts", f"v={v}"), ignore_errors=True
-        )
+        shutil.rmtree(os.path.join(root, "processed", f"b={v}"), ignore_errors=True)
+        shutil.rmtree(os.path.join(root, "counts", f"v={v}"), ignore_errors=True)
     return len(versions)
 
 
@@ -152,7 +154,6 @@ def run_incremental_counts(
 
     spark = envelopes.sparkSession
     run_id = hashlib.md5(checkpoint_path.encode()).hexdigest()[:8]
-    log_path = os.path.join(state_path, "_commitlog")
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         version = f"{run_id}-{batch_id}"
@@ -177,17 +178,15 @@ def run_incremental_counts(
                 "classification", F.col("delta").alias("cnt")
             ).filter(F.col("cnt") != 0)
         # stage both outputs under this batch's version, then commit by
-        # appending one log line; a crash mid-staging leaves orphans the
-        # replay overwrites, never a half-applied state
+        # rewriting the log with one more line; a crash mid-staging leaves
+        # orphans the replay overwrites, never a half-applied state
         state.localCheckpoint(eager=True).write.mode("overwrite").parquet(
             os.path.join(state_path, "counts", f"v={version}")
         )
         fresh.select("ts_ms", "seq").write.mode("overwrite").parquet(
             os.path.join(state_path, "processed", f"b={version}")
         )
-        os.makedirs(state_path, exist_ok=True)
-        with open(log_path, "a") as f:
-            f.write(version + "\n")
+        _commit(state_path, committed + [version])
 
     return (
         envelopes.writeStream.foreachBatch(merge_batch)

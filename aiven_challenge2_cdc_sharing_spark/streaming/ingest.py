@@ -48,6 +48,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.utils import AnalysisException
 
+from .runtime import local_path
+
 
 def run_dedup_ingest(
     docs_stream: DataFrame,
@@ -83,16 +85,9 @@ def run_dedup_ingest(
             # paths; for s3://, hdfs:// etc. it is always False and
             # would misclassify a corrupt-footer/permission failure as
             # "first batch", silently re-admitting every document
-            is_local = "://" not in corpus_path or corpus_path.startswith(
-                "file:"
-            )
-            local = (
-                corpus_path[5:]
-                if corpus_path.startswith("file:")
-                else corpus_path
-            )
+            local = local_path(corpus_path)
             if "PATH_NOT_FOUND" in cond or (
-                is_local and not os.path.exists(local)
+                "://" not in local and not os.path.exists(local)
             ):
                 seen = None  # first batch: corpus doesn't exist yet
             else:

@@ -59,8 +59,26 @@ STATE_SCHEMA_FILE = "_state_schema.json"
 
 def local_path(path: str) -> str:
     """``path`` as a local filesystem path: a ``file:`` URI loses its
-    scheme (Python's ``os`` functions take no URIs, Spark takes both)."""
+    scheme (Python's ``os`` functions take no URIs, Spark takes both).
+
+    Every ``os`` call the streaming sinks make on a table path goes
+    through here, and so works on local filesystems only (plain paths or
+    ``file:`` URIs).  An ``hdfs:`` or ``s3a:`` path needs the Hadoop
+    FileSystem API (``spark._jvm.org.apache.hadoop.fs.FileSystem``)
+    instead; no sink here supports one."""
     return path[len("file:"):] if path.startswith("file:") else path
+
+
+def replace_file(path: str, text: str) -> None:
+    """Atomically make ``text`` the content of the small commit file at
+    ``path`` (local only, see ``local_path``): write a temp file beside
+    it, then ``os.replace`` it in, so a reader or a crash sees the old
+    content or the new, never a partial file."""
+    dst = local_path(path)
+    tmp = f"{dst}.tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, dst)
 
 
 def _state_reader(spark: SparkSession, snapshot_path: str) -> DataFrameReader:
@@ -74,14 +92,6 @@ def _state_reader(spark: SparkSession, snapshot_path: str) -> DataFrameReader:
         return spark.read
 
 
-def _record_state_schema(snapshot_path: str, schema: StructType) -> None:
-    path = os.path.join(local_path(snapshot_path), STATE_SCHEMA_FILE)
-    tmp = f"{path}.tmp"
-    with open(tmp, "w") as f:
-        f.write(schema.json())
-    os.replace(tmp, path)
-
-
 def merge_snapshot_batch(
     batch_df: DataFrame, snapshot_path: str, n_buckets: int
 ) -> None:
@@ -92,9 +102,9 @@ def merge_snapshot_batch(
     Columns an envelope adds mid-stream widen the state: keys last
     written before the column arrived read it as NULL.  After each
     write the state schema is recorded in ``STATE_SCHEMA_FILE`` inside
-    the table (through a temp file and ``os.replace``); the prior-bucket
-    read and ``read_snapshot`` pass it to ``spark.read.schema``, which
-    spares them Spark's schema-inference job and makes an added column
+    the table (through ``replace_file``); the prior-bucket read and
+    ``read_snapshot`` pass it to ``spark.read.schema``, which spares
+    them Spark's schema-inference job and makes an added column
     visible even when the one footer inference reads predates it.  A
     table with no record falls back to inference.  The record is
     written after the data commit: a crash between the two leaves the
@@ -133,7 +143,9 @@ def merge_snapshot_batch(
         .partitionBy("__bucket")
         .parquet(snapshot_path)
     )
-    _record_state_schema(snapshot_path, state.schema)
+    replace_file(
+        os.path.join(snapshot_path, STATE_SCHEMA_FILE), state.schema.json()
+    )
 
 
 def run_snapshot_maintenance(

@@ -31,19 +31,22 @@ def tmpdir():
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_incremental_counts_equal_recompute(spark, sf_dir, tmpdir):
+@pytest.mark.parametrize("scheme", ["", "file:"], ids=["plain", "file_uri"])
+def test_incremental_counts_equal_recompute(spark, sf_dir, tmpdir, scheme):
+    import os
+
     log = generate_envelope_log(spark, sf_dir)
     log.repartition(6).write.json(f"{tmpdir}/ev")  # multiple micro-batches
 
+    state = f"{scheme}{tmpdir}/counts"
     q = run_incremental_counts(
-        envelope_file_stream(spark, f"{tmpdir}/ev"),
-        f"{tmpdir}/counts",
-        f"{tmpdir}/ck",
+        envelope_file_stream(spark, f"{tmpdir}/ev"), state, f"{tmpdir}/ck"
     )
     q.awaitTermination(300)
+    # the commit log lives beside the data, whatever the path's form
+    assert os.path.isfile(f"{tmpdir}/counts/_commitlog")
     got = {
-        r["classification"]: r["cnt"]
-        for r in read_counts(spark, f"{tmpdir}/counts").collect()
+        r["classification"]: r["cnt"] for r in read_counts(spark, state).collect()
     }
     want = {
         r["classification"]: r["cnt"]

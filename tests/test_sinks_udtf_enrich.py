@@ -21,13 +21,15 @@ def tmpdir():
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_write_once_per_batch_skips_replay(spark, sf_dir, tmpdir):
+@pytest.mark.parametrize("scheme", ["", "file:"], ids=["plain", "file_uri"])
+def test_write_once_per_batch_skips_replay(spark, sf_dir, tmpdir, scheme):
+    out = f"{scheme}{tmpdir}"
     df = load_table(spark, sf_dir, "nation")
-    assert write_once_per_batch(df, 7, tmpdir) is True
-    first = spark.read.parquet(f"{tmpdir}/batch_id=7").count()
+    assert write_once_per_batch(df, 7, out) is True
+    first = spark.read.parquet(f"{out}/batch_id=7").count()
     # crash-recovery replays the same batch — must be a no-op
-    assert write_once_per_batch(df.limit(3), 7, tmpdir) is False
-    assert spark.read.parquet(f"{tmpdir}/batch_id=7").count() == first == 25
+    assert write_once_per_batch(df.limit(3), 7, out) is False
+    assert spark.read.parquet(f"{out}/batch_id=7").count() == first == 25
 
 
 def test_udtf_sentence_splitter(spark):
