@@ -30,30 +30,12 @@ At scale, per-batch cost = touched-bucket merge + two scans of the
 sinks, which is the point — transport fan-out multiplies consumers,
 engine fan-out multiplies only cheap derived writes.
 
-Publish protocol: the derived artifacts are SERVING paths, so they are
-never rewritten in place (a parquet ``mode("overwrite")`` deletes then
-writes — an external reader listing the directory mid-overwrite sees
-missing or partial files).  Each batch instead writes a fresh
-versioned directory under ``.versions/`` and atomically repoints a
-symlink at it (``symlink`` + ``rename`` — atomic on POSIX), so a
-reader resolving ``counts/`` always sees exactly one complete,
-immutable version.  The previous version is retained one batch (a
-reader that resolved the link just before the swap can finish its
-scan) and garbage-collected after.  On an object store, the same
-contract is a versioned prefix plus a small ``_LATEST`` manifest
-written via put-then-rename.  The state table has no such swap yet.
-Dynamic partition overwrite stages the new files and moves them in at
-job commit, so no file is ever seen half-written; but it replaces the
-touched buckets one at a time (delete the directory, then rename the
-staged one in), and a reader in that window misses a whole bucket or
-fails on a file deleted under it.  ROADMAP.md direction 1 (commit the
-state through a versioned manifest) is the fix.
+Publish protocol: all three commit through ``runtime.commit_table`` (new
+files, then an atomic manifest replace), so a reader sees one complete
+version of each, and the version it resolved survives the next commit.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -61,46 +43,10 @@ from pyspark.sql.streaming import StreamingQuery
 
 from .runtime import (
     N_SNAPSHOT_BUCKETS,
-    local_path,
+    commit_table,
     merge_snapshot_batch,
     read_snapshot,
 )
-
-
-def _publish_atomic(
-    df: DataFrame, base_dir: str, name: str, batch_id: int
-) -> None:
-    """Write ``df`` as ``base_dir/name`` with an atomic symlink swap.
-
-    Local-filesystem implementation of the versioned-publish contract
-    (this repo's streaming sinks are file-based).  Keeps the CURRENT
-    and PREVIOUS versions on disk, removing older ones only after the
-    swap succeeds.
-    """
-    root = local_path(base_dir)
-    vroot = os.path.join(root, ".versions")
-    os.makedirs(vroot, exist_ok=True)
-    vdir = os.path.join(vroot, f"{name}_v{batch_id}")
-    df.write.mode("overwrite").parquet(vdir)
-    # swap: symlink to a temp name, then rename over the serving path —
-    # rename(2) replaces an existing symlink atomically
-    tmp_link = os.path.join(root, f".{name}_link_tmp")
-    if os.path.lexists(tmp_link):
-        os.remove(tmp_link)
-    os.symlink(vdir, tmp_link)
-    final = os.path.join(root, name)
-    if os.path.isdir(final) and not os.path.islink(final):
-        # first publish over a legacy in-place directory: remove it so
-        # the rename can land (one-time, not the steady-state path)
-        shutil.rmtree(final)
-    os.rename(tmp_link, final)
-    # GC everything older than the previous version
-    versions = sorted(
-        (d for d in os.listdir(vroot) if d.startswith(f"{name}_v")),
-        key=lambda d: int(d.rsplit("_v", 1)[1]),
-    )
-    for stale in versions[:-2]:
-        shutil.rmtree(os.path.join(vroot, stale), ignore_errors=True)
 
 
 def run_shared_serving(
@@ -111,7 +57,8 @@ def run_shared_serving(
 ) -> StreamingQuery:
     """Start the one-pass fan-out; returns the streaming query.
 
-    Artifacts land under ``base_dir/{state,counts,recent}``.
+    Artifacts land under ``base_dir/{state,counts,recent}``, each a
+    ``commit_table`` table: read them with ``runtime.read_table``.
     """
 
     def fanout(batch_df: DataFrame, batch_id: int) -> None:
@@ -121,22 +68,18 @@ def run_shared_serving(
         snap = read_snapshot(spark, f"{base_dir}/state").localCheckpoint(
             eager=False
         )
-        _publish_atomic(
+        commit_table(
             snap.groupBy("classification")
             .agg(F.count(F.lit(1)).alias("cnt"))
             .repartition(1),
-            base_dir,
-            "counts",
-            batch_id,
+            f"{base_dir}/counts",
         )
-        _publish_atomic(
+        commit_table(
             snap.select("id", "full_name", "classification", "created_at")
             .orderBy(F.desc("created_at"), F.desc("id"))
             .limit(10)
             .repartition(1),
-            base_dir,
-            "recent",
-            batch_id,
+            f"{base_dir}/recent",
         )
 
     return (

@@ -21,10 +21,12 @@ semantics too.
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import json
 import os
 
-from pyspark.sql import DataFrame, DataFrameReader, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
@@ -52,44 +54,138 @@ def envelope_file_stream(spark: SparkSession, events_dir: str) -> DataFrame:
 
 N_SNAPSHOT_BUCKETS = 16
 
-# the state schema recorded beside the state table after each write; the
-# leading ``_`` keeps it out of Spark's file listing
-STATE_SCHEMA_FILE = "_state_schema.json"
-
 
 def local_path(path: str) -> str:
     """``path`` as a local filesystem path: a ``file:`` URI loses its
     scheme (Python's ``os`` functions take no URIs, Spark takes both).
-
-    Every ``os`` call the streaming sinks make on a table path goes
-    through here, and so works on local filesystems only (plain paths or
-    ``file:`` URIs).  An ``hdfs:`` or ``s3a:`` path needs the Hadoop
-    FileSystem API (``spark._jvm.org.apache.hadoop.fs.FileSystem``)
-    instead; no sink here supports one."""
+    Every ``os`` call the sinks make on a table path goes through here,
+    so they work on local filesystems only (see ``commit_table``)."""
     return path[len("file:"):] if path.startswith("file:") else path
 
 
 def replace_file(path: str, text: str) -> None:
     """Atomically make ``text`` the content of the small commit file at
-    ``path`` (local only, see ``local_path``): write a temp file beside
-    it, then ``os.replace`` it in, so a reader or a crash sees the old
-    content or the new, never a partial file."""
+    ``path`` (local only, see ``local_path``): write and flush a temp file
+    beside it, then ``os.replace`` it in, so a reader or a crash sees the
+    old content or the new, never a partial file."""
     dst = local_path(path)
     tmp = f"{dst}.tmp"
     with open(tmp, "w") as f:
         f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
     os.replace(tmp, dst)
 
 
-def _state_reader(spark: SparkSession, snapshot_path: str) -> DataFrameReader:
-    """``spark.read`` carrying the state schema recorded at the last
-    write; a table with no record (written before the record was kept)
-    falls back to inference."""
-    try:
-        with open(os.path.join(local_path(snapshot_path), STATE_SCHEMA_FILE)) as f:
-            return spark.read.schema(StructType.fromJson(json.load(f)))
-    except FileNotFoundError:
-        return spark.read
+def _versions(root: str) -> list[int]:
+    d = os.path.join(root, "_manifest")
+    names = os.listdir(d) if os.path.isdir(d) else []
+    return sorted(int(n[: -len(".json")]) for n in names if n.endswith(".json"))
+
+
+def _load_manifest(root: str, version: int) -> dict:
+    with open(os.path.join(root, "_manifest", f"{version}.json")) as f:
+        return json.load(f)
+
+
+def _listed(manifest: dict) -> set[tuple[str, str]]:
+    return {(p, f) for p, fs in manifest["files"].items() for f in fs}
+
+
+def _tag(version: int) -> str:
+    # counts down, so a sorted listing of a partition shows its newest files first
+    return f"{10**9 - 1 - version:09d}-"
+
+
+def _data_files(root: str):
+    """(directory, name) of each data file and checksum of the table."""
+    for d, subdirs, names in os.walk(root):
+        subdirs[:] = [s for s in subdirs if s not in ("_staging", "_manifest")]
+        yield from ((d, f) for f in names if ".parquet" in f)
+
+
+def _newest_manifest(path: str) -> dict | None:
+    """The newest manifest of the table at ``path``, or None.  Data files
+    with no manifest raise (reading them as empty would shadow another
+    table), except those a crashed first commit leaves."""
+    root = local_path(path)
+    versions = _versions(root)
+    if versions:
+        return _load_manifest(root, versions[-1])
+    if any(not f.lstrip(".").startswith(_tag(0)) for _, f in _data_files(root)):
+        raise ValueError(f"{path} holds data but no _manifest/")
+    return None
+
+
+def commit_table(df: DataFrame, path: str, partition_by: str | None = None) -> None:
+    """Write ``df`` as the next version n of the table at ``path``.
+
+    One Spark write to ``path/_staging``; each staged file is renamed
+    into its partition directory under a ``_tag(n)`` prefix, and the
+    partitions ``df`` lacks carry over from n-1.  The commit is one
+    ``replace_file`` of ``_manifest/<n>.json`` (schema, live files per
+    partition): a reader or a crashed process sees n-1 or n, never a
+    mix.  After it, the files older manifests list and n-1 does not are
+    deleted, so a reader that resolved n-1 can finish its scan.  Read it
+    with ``read_table``.  Local filesystems only (plain paths or ``file:``
+    URIs): an ``hdfs:`` or ``s3a:`` table needs the Hadoop FileSystem API.
+    """
+    root = local_path(path)
+    prev = _newest_manifest(path)
+    n = 0 if prev is None else prev["version"] + 1
+    for d, f in list(_data_files(root)):
+        if f.lstrip(".").startswith(_tag(n)):  # left by a crashed attempt at n
+            os.remove(os.path.join(d, f))
+    writer = df.write.mode("overwrite")
+    (writer.partitionBy(partition_by) if partition_by else writer).parquet(f"{path}/_staging")
+    staging = os.path.join(root, "_staging")
+    files = dict(prev["files"]) if prev and partition_by else {}
+    parts = [p for p in os.listdir(staging) if "=" in p] if partition_by else [""]
+    for i, part in enumerate(parts):
+        # ``i``: a task's file name repeats in each partition it writes
+        prefix, src, dst = f"{_tag(n)}{i}-", os.path.join(staging, part), os.path.join(root, part)
+        os.makedirs(dst, exist_ok=True)
+        staged = [f for f in os.listdir(src) if ".parquet" in f]  # and checksums ``.<f>.crc``
+        for f in staged:
+            new = f".{prefix}{f[1:]}" if f.startswith(".") else prefix + f
+            os.rename(os.path.join(src, f), os.path.join(dst, new))
+        files[part] = sorted(prefix + f for f in staged if not f.startswith("."))
+    os.makedirs(os.path.join(root, "_manifest"), exist_ok=True)
+    manifest = {"version": n, "schema": json.loads(df.schema.json()), "files": files}
+    replace_file(os.path.join(root, "_manifest", f"{n}.json"), json.dumps(manifest))
+    for v in _versions(root)[:-2]:
+        for p, f in _listed(_load_manifest(root, v)) - _listed(prev):
+            for name in (f, f".{f}.crc"):
+                with contextlib.suppress(FileNotFoundError):  # removed before a crash
+                    os.remove(os.path.join(root, p, name))
+        os.remove(os.path.join(root, "_manifest", f"{v}.json"))
+
+
+@functools.lru_cache(maxsize=32)
+def _relation(spark: SparkSession, path: str, schema: str, parts: tuple, names: tuple):
+    return (
+        spark.read.schema(StructType.fromJson(json.loads(schema)))
+        .option("basePath", path)
+        .option("pathGlobFilter", "{" + ",".join(names) + "}")
+        .parquet(*[f"{path}/{p}" if p else path for p in parts])
+    )
+
+
+def read_table(spark: SparkSession, path: str, parts: list[str] | None = None) -> DataFrame:
+    """The newest version of a ``commit_table`` table, with its recorded
+    schema; ``parts`` (such as ``"__bucket=3"``) limits it to those
+    partitions.  One directory per partition keeps it below Spark's
+    32-path threshold for a listing job; ``pathGlobFilter`` picks the
+    live files.  A session reuses the relation built for the same files:
+    a committed version never changes, and its file names are unique."""
+    m = _newest_manifest(path)
+    if m is None:
+        raise FileNotFoundError(f"no table committed at {path}")
+    files = m["files"] if parts is None else {p: m["files"][p] for p in parts if p in m["files"]}
+    names = tuple(sorted(f for fs in files.values() for f in fs))
+    if not names:
+        return spark.createDataFrame([], StructType.fromJson(m["schema"]))
+    return _relation(spark, path, json.dumps(m["schema"]), tuple(sorted(files)), names)
 
 
 def merge_snapshot_batch(
@@ -100,20 +196,7 @@ def merge_snapshot_batch(
     unwrap, bucket by key hash, rewrite only touched buckets.
 
     Columns an envelope adds mid-stream widen the state: keys last
-    written before the column arrived read it as NULL.  After each
-    write the state schema is recorded in ``STATE_SCHEMA_FILE`` inside
-    the table (through ``replace_file``); the prior-bucket read and
-    ``read_snapshot`` pass it to ``spark.read.schema``, which spares
-    them Spark's schema-inference job and makes an added column
-    visible even when the one footer inference reads predates it.  A
-    table with no record falls back to inference.  The record is
-    written after the data commit: a crash between the two leaves the
-    old record, and the replayed batch restores the columns it adds.
-
-    No checkpoint precedes the write, although the merged state reads
-    the buckets it overwrites: dynamic partition overwrite stages the
-    new files and swaps the buckets only at job commit, after every
-    read of the prior files has finished.
+    written before the column arrived read it as NULL.
     """
     spark = batch_df.sparkSession
     changes = unwrap(batch_df).withColumn(
@@ -128,24 +211,12 @@ def merge_snapshot_batch(
     ]
     if not touched:
         return
-    if os.path.exists(local_path(snapshot_path)):
-        prior = (
-            _state_reader(spark, snapshot_path)
-            .parquet(snapshot_path)
-            .filter(F.col("__bucket").isin(touched))
-        )
+    try:
+        prior = read_table(spark, snapshot_path, [f"__bucket={b}" for b in touched])
         state = merge_state(prior, changes)
-    else:
+    except FileNotFoundError:  # the first batch
         state = latest_state(changes)
-    (
-        state.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__bucket")
-        .parquet(snapshot_path)
-    )
-    replace_file(
-        os.path.join(snapshot_path, STATE_SCHEMA_FILE), state.schema.json()
-    )
+    commit_table(state, snapshot_path, "__bucket")
 
 
 def run_snapshot_maintenance(
@@ -172,21 +243,13 @@ def run_snapshot_maintenance(
 
     Incremental storage: the state table is hash-partitioned into
     ``n_buckets`` key-buckets (``__bucket=pmod(xxhash64(id), n)``) and a
-    micro-batch rewrites ONLY the buckets its keys touch — prior state
-    is read with a partition-pruned scan and the write uses dynamic
-    partition overwrite, so untouched buckets' files are never opened
-    or rewritten.  This approximates Delta/Iceberg MERGE file-pruning
-    on stock parquet: per-batch write cost is O(touched buckets), not
-    O(table).  At 100 TB, set ``n_buckets`` so one bucket ~ one
-    executor's comfortable rewrite unit; a micro-batch with uniformly
-    random keys touches every bucket (worst case = full rewrite, same
-    as round 1), but real CDC batches are small and key-local.
-
-    Each write records the state schema in ``STATE_SCHEMA_FILE`` inside
-    the table; reads of the table use it instead of a schema-inference
-    job, and tables with no record fall back to inference.  No
-    checkpoint precedes the bucket overwrite (``merge_snapshot_batch``
-    says why that is safe).
+    micro-batch reads and rewrites ONLY the buckets its keys touch
+    (``read_table``/``commit_table``): per-batch cost is O(touched
+    buckets), not O(table), like Delta/Iceberg MERGE file pruning on
+    stock parquet.  Size ``n_buckets`` so one bucket is one executor's
+    comfortable rewrite unit; a batch of uniformly random keys touches
+    every bucket (a full rewrite), but CDC batches are small and
+    key-local.
     """
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         merge_snapshot_batch(batch_df, snapshot_path, n_buckets)
@@ -202,14 +265,8 @@ def run_snapshot_maintenance(
 
 
 def read_snapshot(spark: SparkSession, snapshot_path: str) -> DataFrame:
-    """User-facing current state from a maintained state table.
-
-    Reads with the schema ``merge_snapshot_batch`` recorded, so the
-    read plans without a schema-inference job and shows every column
-    the state has gained; a table with no record falls back to
-    inference."""
-    state = _state_reader(spark, snapshot_path).parquet(snapshot_path)
-    return published_snapshot(state).drop("__bucket")
+    """User-facing current state: the live rows of the newest version."""
+    return published_snapshot(read_table(spark, snapshot_path)).drop("__bucket")
 
 
 def windowed_counts(

@@ -508,6 +508,7 @@ def test_shared_serving_fanout_matches_batch_path(spark, sf_dir, tmpdir):
         envelope_file_stream,
         run_shared_serving,
     )
+    from aiven_challenge2_cdc_sharing_spark.streaming.runtime import read_table
 
     log = generate_envelope_log(spark, sf_dir)
     log.repartition(6).write.mode("overwrite").json(f"{tmpdir}/ev")
@@ -526,7 +527,7 @@ def test_shared_serving_fanout_matches_batch_path(spark, sf_dir, tmpdir):
     }
     got_counts = {
         (r.classification, r.cnt)
-        for r in spark.read.parquet(f"{tmpdir}/serve/counts").collect()
+        for r in read_table(spark, f"{tmpdir}/serve/counts").collect()
     }
     assert got_counts == exp_counts
     exp_recent = [
@@ -537,7 +538,7 @@ def test_shared_serving_fanout_matches_batch_path(spark, sf_dir, tmpdir):
     ]
     got_recent = [
         r.id
-        for r in spark.read.parquet(f"{tmpdir}/serve/recent")
+        for r in read_table(spark, f"{tmpdir}/serve/recent")
         .orderBy(F.desc("created_at"), F.desc("id"))
         .collect()
     ]

@@ -4,6 +4,9 @@ and support windowed counts + peek."""
 
 from __future__ import annotations
 
+import glob
+import json
+import os
 import shutil
 import tempfile
 
@@ -42,6 +45,14 @@ def rows_set(df):
     return {tuple(str(x) for x in r) for r in df.select(*sorted(df.columns)).collect()}
 
 
+def _newest_manifest(table):
+    """The newest ``_manifest/<n>.json`` of a ``commit_table`` table."""
+    names = os.listdir(f"{table}/_manifest")
+    newest = max(int(n[: -len(".json")]) for n in names if n.endswith(".json"))
+    with open(f"{table}/_manifest/{newest}.json") as f:
+        return json.load(f)
+
+
 def test_stream_snapshot_equals_batch(spark, sf_dir, tmpdir):
     events_dir = f"{tmpdir}/events"
     log = _write_event_json(spark, sf_dir, events_dir)
@@ -78,9 +89,7 @@ def test_untouched_buckets_not_rewritten(spark, sf_dir, tmpdir):
     key must rewrite only that key's bucket partition — every other
     bucket's files stay byte-identical (the stock-parquet analogue of
     Delta MERGE file pruning)."""
-    import glob
     import hashlib
-    import os
 
     events_dir = f"{tmpdir}/events"
     log = _write_event_json(spark, sf_dir, events_dir)
@@ -91,13 +100,14 @@ def test_untouched_buckets_not_rewritten(spark, sf_dir, tmpdir):
     q.awaitTermination(300)
 
     def digests():
+        # the live files the newest manifest lists for each bucket
         out = {}
-        for path in glob.glob(f"{snap}/__bucket=*/*.parquet"):
-            bucket = path.split("__bucket=")[1].split("/")[0]
-            with open(path, "rb") as f:
-                out.setdefault(int(bucket), []).append(
-                    (os.path.basename(path), hashlib.md5(f.read()).hexdigest())
-                )
+        for part, names in _newest_manifest(snap)["files"].items():
+            for name in names:
+                with open(f"{snap}/{part}/{name}", "rb") as f:
+                    out.setdefault(int(part.split("=")[1]), []).append(
+                        (name, hashlib.md5(f.read()).hexdigest())
+                    )
         return {b: sorted(files) for b, files in out.items()}
 
     before = digests()
@@ -321,16 +331,137 @@ def test_column_added_mid_stream_is_kept(spark, tmpdir):
 def test_replayed_batch_leaves_state_identical(spark, tmpdir):
     """Re-applying a batch (an at-least-once redelivery) leaves the state
     table, tombstones and change metadata included, as it was."""
-    from aiven_challenge2_cdc_sharing_spark.streaming.runtime import merge_snapshot_batch
+    from aiven_challenge2_cdc_sharing_spark.streaming.runtime import (
+        merge_snapshot_batch,
+        read_table,
+    )
 
     snap = f"{tmpdir}/state"
     merge_snapshot_batch(_inserts(spark, range(1, 101)), snap, 16)
     batch = _envelopes(spark, [("u", 7, 2, 200), ("d", 8, 2, 201), ("c", 101, 2, 202)])
     merge_snapshot_batch(batch, snap, 16)
-    once = rows_set(spark.read.parquet(snap))
+    once = rows_set(read_table(spark, snap))
     merge_snapshot_batch(batch, snap, 16)
-    assert rows_set(spark.read.parquet(snap)) == once
+    assert rows_set(read_table(spark, snap)) == once
     assert len(once) == 101  # the tombstone of key 8 is kept
+
+
+@pytest.mark.parametrize("uri", [False, True], ids=["plain", "file_uri"])
+def test_held_read_survives_next_apply(spark, tmpdir, uri):
+    """A snapshot DataFrame built before an apply still collects, after
+    it, the version it resolved: the commit keeps that version's files."""
+    from aiven_challenge2_cdc_sharing_spark.streaming.runtime import merge_snapshot_batch
+
+    snap = f"file:{tmpdir}/state" if uri else f"{tmpdir}/state"
+    merge_snapshot_batch(_inserts(spark, range(1, 201)), snap, 16)
+    held = read_snapshot(spark, snap)
+    # updates every key, so every bucket gets a new version
+    merge_snapshot_batch(
+        _envelopes(spark, [("u", k, 2, 1000 + k) for k in range(1, 201)]), snap, 16
+    )
+    assert sorted(r["id"] for r in held.collect()) == list(range(1, 201))
+
+
+def test_concurrent_reads_see_whole_versions(spark, tmpdir):
+    """A reader thread counting the snapshot while update-only batches
+    apply always sees every key, and never a file deleted under it."""
+    import threading
+
+    from aiven_challenge2_cdc_sharing_spark.streaming.runtime import merge_snapshot_batch
+
+    snap = f"{tmpdir}/state"
+    merge_snapshot_batch(_inserts(spark, range(1, 401)), snap, 16)
+    stop, counts, errors = threading.Event(), [], []
+
+    def reader():
+        while not stop.is_set():
+            try:
+                counts.append(read_snapshot(spark, snap).count())
+            except Exception as e:  # recorded, asserted on below
+                errors.append(e)
+
+    t = threading.Thread(target=reader, daemon=True)
+    t.start()
+    try:
+        for i in range(8):
+            keys = range(1 + 7 * i, 400, 50)
+            merge_snapshot_batch(
+                _envelopes(spark, [("u", k, 2 + i, 1000 + k) for k in keys]), snap, 16
+            )
+    finally:
+        stop.set()
+        t.join(timeout=120)
+    assert not t.is_alive()
+    assert not errors, errors[0]
+    assert counts and set(counts) == {400}
+
+
+def _files_on_disk_and_listed(table):
+    """The state table's data files on disk, and those its manifests list,
+    as (bucket directory, file name) pairs."""
+    on_disk = {
+        tuple(p.split(os.sep)[-2:]) for p in glob.glob(f"{table}/__bucket=*/*.parquet")
+    }
+    listed = set()
+    for name in os.listdir(f"{table}/_manifest"):
+        with open(f"{table}/_manifest/{name}") as f:
+            listed |= {(p, n) for p, ns in json.load(f)["files"].items() for n in ns}
+    return on_disk, listed
+
+
+@pytest.mark.parametrize("retry", ["same_batch", "other_buckets"])
+def test_crash_before_manifest_keeps_previous_version(spark, tmpdir, monkeypatch, retry):
+    """A crash after the data write and before the manifest commit leaves
+    the previous version readable and complete.  The next apply gives the
+    state an uninterrupted run gives and leaves no file of the crashed
+    attempt behind, also when it touches other buckets than the crash."""
+    from aiven_challenge2_cdc_sharing_spark.streaming import runtime
+
+    snap, ref = f"{tmpdir}/state", f"{tmpdir}/ref"
+    first = _inserts(spark, range(1, 101))
+    batch = _envelopes(spark, [("u", 7, 2, 200), ("d", 8, 2, 201), ("c", 101, 2, 202)])
+    for table in (snap, ref):
+        runtime.merge_snapshot_batch(first, table, 16)
+    before = rows_set(read_snapshot(spark, snap))
+    assert len(before) == 100
+
+    def crash(path, text):
+        raise OSError("injected crash before the manifest commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(runtime, "replace_file", crash)
+        with pytest.raises(OSError, match="injected crash"):
+            runtime.merge_snapshot_batch(batch, snap, 16)
+    assert rows_set(read_snapshot(spark, snap)) == before
+
+    if retry == "other_buckets":
+        bucket = dict(spark.range(1, 102).select(
+            "id", F.expr("pmod(xxhash64(CAST(id AS INT)), 16)")).collect())
+        key = next(k for k in range(1, 101) if bucket[k] not in {bucket[7], bucket[8], bucket[101]})
+        batch = _envelopes(spark, [("u", key, 2, 300)])
+    runtime.merge_snapshot_batch(batch, snap, 16)
+    runtime.merge_snapshot_batch(batch, ref, 16)
+    assert rows_set(runtime.read_table(spark, snap)) == rows_set(
+        runtime.read_table(spark, ref)
+    )
+    on_disk, listed = _files_on_disk_and_listed(snap)
+    assert on_disk == listed
+
+
+def test_commit_keeps_at_most_two_versions(spark, tmpdir):
+    """Old versions are deleted one commit late: after 5 applies at most
+    2 manifests remain, and they list every data file left."""
+    from aiven_challenge2_cdc_sharing_spark.streaming.runtime import merge_snapshot_batch
+
+    snap = f"{tmpdir}/state"
+    merge_snapshot_batch(_inserts(spark, range(1, 101)), snap, 16)
+    for i in range(4):
+        merge_snapshot_batch(
+            _envelopes(spark, [("u", k, 2 + i, 300 + k) for k in (3 + i, 50 + i)]), snap, 16
+        )
+    assert len(os.listdir(f"{snap}/_manifest")) <= 2
+    on_disk, listed = _files_on_disk_and_listed(snap)
+    assert on_disk == listed
 
 
 def test_merge_and_read_job_counts(spark, tmpdir):
