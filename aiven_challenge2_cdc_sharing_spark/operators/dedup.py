@@ -647,7 +647,6 @@ def semantic_dedup_pairs(
     n_clusters: int = 16,
     iters: int = 2,
     max_cluster_size: int | None = 10_000,
-    assign_strategy: str = "auto",
 ) -> DataFrame:
     """Semantic near-dup pairs over an embedding column — the SemDeDup
     formulation (Abbas et al. 2023, arXiv:2303.09540): k-means-cluster
@@ -690,11 +689,10 @@ def semantic_dedup_pairs(
         iters=iters,
         id_col=id_col,
         vec_col="__e",
-        assign_strategy=assign_strategy,
     ).localCheckpoint(eager=False)
-    assigned = _assign(
-        vecs, cents, "__e", "__cluster", n_clusters, assign_strategy
-    ).withColumn("__n", _norm(F.col("__e")))
+    assigned = _assign(vecs, cents, "__e", "__cluster", n_clusters).withColumn(
+        "__n", _norm(F.col("__e"))
+    )
     if max_cluster_size is not None:
         # truncate, don't drop: an oversized cluster still contributes
         # its first max_cluster_size members (by id) — unlike the LSH

@@ -167,11 +167,8 @@ def _assign(
     vec_col: str,
     out_col: str,
     n_lists: int,
-    strategy: str = "auto",
 ) -> DataFrame:
-    if strategy == "hof" or (
-        strategy == "auto" and n_lists <= _MATMUL_THRESHOLD
-    ):
+    if n_lists <= _MATMUL_THRESHOLD:
         return _assign_nearest(vectors, centroids, vec_col, out_col)
     return _assign_nearest_matmul(vectors, centroids, vec_col, out_col)
 
@@ -182,7 +179,6 @@ def train_ivf_centroids(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign_strategy: str = "auto",
 ) -> DataFrame:
     """Deterministic IVF coarse quantizer: k-means with fixed seeds
     (centroids initialized from the first n_lists ids), Lloyd iterations
@@ -207,11 +203,8 @@ def train_ivf_centroids(
             F.col(vec_col).cast("array<double>").alias("__cvec"),
         )
     )
-    matmul = assign_strategy == "matmul" or (
-        assign_strategy == "auto" and n_lists > _MATMUL_THRESHOLD
-    )
     for _ in range(iters):
-        if matmul:
+        if n_lists > _MATMUL_THRESHOLD:
             # the matmul path collects the centroid table per pass;
             # cut its lineage so each collect is k rows, not a replay
             # of every previous Lloyd update
@@ -222,7 +215,6 @@ def train_ivf_centroids(
             vec_col,
             "__cluster",
             n_lists,
-            assign_strategy,
         )
         cents = (
             assigned.select(
@@ -257,7 +249,6 @@ def cosine_topk_ivf(
     k: int = 10,
     n_lists: int = 16,
     n_probe: int = 4,
-    assign_strategy: str = "auto",
 ) -> DataFrame:
     """IVF search: vectors pre-assigned to their nearest centroid list;
     each query scores only the ``n_probe`` nearest lists — candidate
@@ -269,23 +260,14 @@ def cosine_topk_ivf(
     showed 22 exchanges; at scale the centroid table would simply be
     persisted once at index-build time).
 
-    ``assign_strategy``: 'hof' (JVM expression argmin), 'matmul'
-    (Arrow-batched BLAS — see ``_assign_nearest_matmul``), or 'auto'
-    (matmul past 32 lists, where the HOF falls out of codegen)."""
+    Assignment is the JVM expression argmin up to 32 lists and the
+    Arrow-batched BLAS one (``_assign_nearest_matmul``) past that,
+    where the expression falls out of codegen."""
     cents = train_ivf_centroids(
-        vectors,
-        n_lists,
-        id_col=id_col,
-        vec_col=vec_col,
-        assign_strategy=assign_strategy,
+        vectors, n_lists, id_col=id_col, vec_col=vec_col
     ).localCheckpoint(eager=False)
     assigned = _assign(
-        vectors.select(id_col, vec_col),
-        cents,
-        vec_col,
-        "__cluster",
-        n_lists,
-        assign_strategy,
+        vectors.select(id_col, vec_col), cents, vec_col, "__cluster", n_lists
     )
     q = queries.select(
         query_id_col, F.col(query_vec_col).cast("array<double>").alias("__qvec")

@@ -89,8 +89,7 @@ def global_prefix_sum(
     val_col: str,
     out_col: str = "prefix_sum",
     partitions: int = 32,
-    return_totals: bool = False,
-):
+) -> tuple[DataFrame, int | float, int]:
     """Running sum over a total order WITHOUT a single-partition window
     — the value-summing sibling of ``global_ordinal``: range-partition
     by the sort key (ordered, non-overlapping key ranges), cumulative
@@ -105,9 +104,9 @@ def global_prefix_sum(
     action — eager=True paid the same materialization as a separate
     job wave first.
 
-    ``return_totals=True`` returns ``(df_with_out_col, total_sum,
-    n_rows)`` — the grand total and row count come free from the same
-    per-partition offsets collect, so "crossing" consumers
+    Returns ``(df_with_out_col, total_sum, n_rows)``: the grand total
+    and row count come free from the same per-partition offsets
+    collect, so "crossing" consumers
     (weighted median/percentiles, ABC classes, KS/AD statistics)
     need NO second aggregation pass over the pre-prefix subtree
     (round-12, guide §1.2: don't recompute what the offsets job
@@ -139,9 +138,7 @@ def global_prefix_sum(
     out = ranged.withColumn(
         out_col, F.sum(val_col).over(w) + offset_map[F.col("__pid")]
     ).drop("__pid")
-    if return_totals:
-        return out, acc, n_rows
-    return out
+    return out, acc, n_rows
 
 
 def global_prefix_max(

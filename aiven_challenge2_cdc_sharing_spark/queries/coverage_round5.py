@@ -174,7 +174,7 @@ def dash_peak_concurrency_scalable(
         )
     )
     change_points = deltas.groupBy("t").agg(F.sum("d").alias("dd"))
-    sweep = global_prefix_sum(
+    sweep, _total, _n = global_prefix_sum(
         change_points, [F.col("t")], "dd", out_col="live"
     )
     return sweep.agg(
@@ -237,7 +237,7 @@ def stats_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # offsets collect already summed (sum(c) = n1*2^32 + n2 exactly
     # while n2 < 2^32) — the old tot re-ran the whole events groupBy
     ps, packed_total, _n = global_prefix_sum(
-        packed, [F.col("value")], "c", out_col="ps", return_totals=True
+        packed, [F.col("value")], "c", out_col="ps"
     )
     n1, n2 = packed_total // 2**32, packed_total % 2**32
     cum = ps.select(
@@ -1711,7 +1711,9 @@ def stats_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     packed = vals.select(
         "value", "d1", "d2", (F.col("d1") + F.col("d2")).alias("dt")
     )
-    ps = global_prefix_sum(packed, [F.col("value")], "dt", out_col="ca")
+    ps, _total, _n = global_prefix_sum(
+        packed, [F.col("value")], "dt", out_col="ca"
+    )
     cum = ps.select(
         "d1", "d2", (F.col("ca") - F.col("dt")).alias("before_all")
     )
@@ -1779,7 +1781,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the old tot = by_val.agg(...) re-ran the whole lineitem groupBy
     # a second time for one long the operator had already summed
     cum, tw, _n = global_prefix_sum(
-        by_val, [F.col("v")], "w", out_col="cw", return_totals=True
+        by_val, [F.col("v")], "w", out_col="cw"
     )
     return (
         cum.filter(F.col("cw") * 2 >= F.lit(tw).cast("long"))
@@ -1850,7 +1852,7 @@ def ml_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round-12: (nt, pt) unpack from the operator's packed grand total
     # (sum(c) = nt*2^32 + pt, exact integers) — no second orders agg
     ps, packed_total, _n = global_prefix_sum(
-        packed, [F.col("bucket")], "c", out_col="cc", return_totals=True
+        packed, [F.col("bucket")], "c", out_col="cc"
     )
     nt, pt = packed_total // 2**32, packed_total % 2**32
     cum = ps.select(
@@ -2036,7 +2038,6 @@ def win_pareto_80_20(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.desc("cents"), F.col("o_custkey")],
         "cents",
         out_col="cc",
-        return_totals=True,
     )
     hit = (F.col("cc") - F.col("cents")) * 5 < F.lit(tc).cast("long") * 4
     return (
@@ -3392,7 +3393,7 @@ def agg_weighted_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (guide §1.2/§2.4).  Each min(when(...)) is the identical exact
     # integer crossing test, so all three quantiles are bit-identical.
     cum, tw, _n = global_prefix_sum(
-        by_val, [F.col("v")], "w", out_col="cw", return_totals=True
+        by_val, [F.col("v")], "w", out_col="cw"
     )
     q = lambda num, den: F.round(  # noqa: E731
         F.min(F.when(F.col("cw") * den >= F.lit(tw).cast("long") * num, F.col("v"))), 2

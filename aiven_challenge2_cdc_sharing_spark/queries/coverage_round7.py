@@ -472,7 +472,6 @@ def agg_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.col("cents").desc(), F.col("l_partkey")],
         "cents",
         out_col="prefix",
-        return_totals=True,
     )
     cls = pre.select(
         "cents",
@@ -1927,7 +1926,7 @@ def text_type_coverage_budget(
     # Round-12: the corpus token total rides the prefix-sum offsets
     # collect — the old tot re-ran the documents explode + groupBy
     pre, t, _n = global_prefix_sum(
-        ranked, [F.col("r")], "c", out_col="pre", return_totals=True
+        ranked, [F.col("r")], "c", out_col="pre"
     )
     pre = pre.select("r", F.col("pre").cast("long").alias("pre"))
     thr = spark.range(1).select(

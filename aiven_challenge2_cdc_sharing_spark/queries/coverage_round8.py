@@ -650,7 +650,7 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # collect (sum of histogram counts = n_cal exactly) — the old
     # cal_n re-ran the base filter + residual projection a second time
     cum, n_cal, _nbins = global_prefix_sum(
-        hist, [F.col("r_cents")], "c", out_col="cw", return_totals=True
+        hist, [F.col("r_cents")], "c", out_col="cw"
     )
     cum = cum.select("r_cents", "cw")
     q = (

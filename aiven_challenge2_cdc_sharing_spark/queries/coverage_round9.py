@@ -327,7 +327,7 @@ def stats_anderson_darling_2s(spark: SparkSession, sf_dir: str) -> DataFrame:
     # total (sum(lm) = n*2^32 + n1 exactly while n1 < 2^32) — the old
     # sizes aggregate re-scanned orders + re-broadcast the median cut
     pre, packed_total, _nbins = global_prefix_sum(
-        packed, [F.col("cents")], "lm", out_col="cum", return_totals=True
+        packed, [F.col("cents")], "lm", out_col="cum"
     )
     n_all = packed_total // (1 << 32)
     n1 = packed_total % (1 << 32)
@@ -4991,7 +4991,7 @@ def stats_median_ci_binomial(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same long — correctly-rounded per IEEE-754, so bit-equal).
     hist = o.groupBy("cents").agg(F.count(F.lit(1)).alias("c"))
     cum, n_rows, _nbins = global_prefix_sum(
-        hist, [F.col("cents")], "c", out_col="cw", return_totals=True
+        hist, [F.col("cents")], "c", out_col="cw"
     )
     import math
 

@@ -23,170 +23,118 @@ generator does this on purpose).  The maintainer therefore keeps a
 processed-(ts_ms, seq) log next to the counts and anti-joins each batch
 against it before computing deltas.
 
-Crash-atomicity between the counts write and the processed-log write is
-MVCC-lite: each micro-batch stages BOTH under a version named
-``<run>-<batch_id>`` (``counts/v=...``, ``processed/b=...``) and then
-commits by atomically rewriting ``_commitlog`` with one more line
-(``runtime.replace_file``); readers and later batches only ever see
-committed versions, so a crash between the staging writes leaves
-orphan directories that the replayed batch simply overwrites — never
-a half-applied state (the manifest-pointer idea Delta/Iceberg use,
-minus compaction).  Versions are scoped by a run id
-derived from the checkpoint location because batch_ids RESTART at 0
-when a checkpoint is lost: a same-run replay (identical batch content,
-guaranteed by Structured Streaming) is skipped via the log, while a
-new run never matches an old version name and instead deduplicates at
-the event level through the processed log — the layer that makes
-checkpoint-loss replay exact.  At scale the per-batch processed dirs
-are bounded by watermark retention and periodically compacted.
+The counts (``__part=counts``) and the processed log (``__part=seen``)
+are partitions of one ``runtime.commit_table`` table, so one manifest
+commit publishes both or neither.  Each commit rewrites the log whole,
+so it grows with every event processed; at scale it would be bounded by
+the source's redelivery horizon (watermark or topic retention): a key
+older than any event the source can still redeliver can be dropped at
+commit time, which keeps the write proportional to that window.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .runtime import local_path, replace_file
+from .runtime import commit_table, read_table
 
-COMMIT_LOG = "_commitlog"
+_STATE = ("classification string", "cnt bigint", "ts_ms bigint", "seq bigint",
+         "__part string")
+_COUNTS, _SEEN = "__part=counts", "__part=seen"
+
+
+def _deltas(events: DataFrame) -> DataFrame:
+    """(classification, delta) of envelopes already deduplicated by
+    (ts_ms, seq)."""
+    op = F.col("op")
+    # both images of an event in one row: a union of the +1 and -1 sides
+    # would read the batch twice (one more shuffle, one more job)
+    images = F.array(
+        F.struct(
+            F.col("after.classification").alias("c"),
+            F.when(op.isin("c", "u"), 1).otherwise(0).alias("d"),
+        ),
+        F.struct(
+            F.col("before.classification").alias("c"),
+            F.when(op.isin("u", "d"), -1).otherwise(0).alias("d"),
+        ),
+    )
+    return (
+        events.select(F.explode(F.filter(images, lambda i: i["d"] != 0)).alias("i"))
+        .groupBy(F.col("i.c").alias("classification"))
+        .agg(F.sum("i.d").alias("delta"))
+    )
 
 
 def classification_deltas(envelopes: DataFrame) -> DataFrame:
     """Envelope batch -> (classification, delta) contributions."""
-    deduped = envelopes.dropDuplicates(["ts_ms", "seq"])
-    plus = deduped.filter(F.col("op").isin("c", "u")).select(
-        F.col("after.classification").alias("classification"),
-        F.lit(1).alias("delta"),
-    )
-    minus = deduped.filter(F.col("op").isin("u", "d")).select(
-        F.col("before.classification").alias("classification"),
-        F.lit(-1).alias("delta"),
-    )
+    return _deltas(envelopes.dropDuplicates(["ts_ms", "seq"]))
+
+
+def _fold(counts: DataFrame, deltas: DataFrame) -> DataFrame:
     return (
-        plus.unionByName(minus)
+        counts.select("classification", F.col("cnt").alias("delta"))
+        .unionByName(deltas)
         .groupBy("classification")
-        .agg(F.sum("delta").alias("delta"))
+        .agg(F.sum("delta").alias("cnt"))
     )
 
 
 def apply_agg_deltas(counts: DataFrame, deltas: DataFrame) -> DataFrame:
     """Merge delta rows into a (classification, cnt) state table,
     dropping groups that reach zero."""
-    merged = (
-        counts.select("classification", F.col("cnt").alias("delta"))
-        .unionByName(deltas)
-        .groupBy("classification")
-        .agg(F.sum("delta").alias("cnt"))
-        .filter(F.col("cnt") != 0)
-    )
-    return merged
+    return _fold(counts, deltas).filter(F.col("cnt") != 0)
 
 
-def _committed_versions(state_path: str) -> list[str]:
+def _read(spark: SparkSession, state_path: str, parts: list[str]) -> DataFrame:
     try:
-        with open(os.path.join(local_path(state_path), COMMIT_LOG)) as f:
-            return f.read().split()
-    except FileNotFoundError:
-        return []
-
-
-def _commit(state_path: str, versions: list[str]) -> None:
-    replace_file(
-        os.path.join(state_path, COMMIT_LOG), "".join(f"{v}\n" for v in versions)
-    )
+        return read_table(spark, state_path, parts)
+    except FileNotFoundError:  # before the first commit
+        # built JVM-side: ``createDataFrame([])`` starts Python workers
+        cols = [f"CAST(NULL AS {t}) AS {c}" for c, t in map(str.split, _STATE)]
+        return spark.range(0).selectExpr(*cols)
 
 
 def read_counts(spark: SparkSession, state_path: str) -> DataFrame:
     """Latest committed counts state (empty frame before first commit)."""
-    versions = _committed_versions(state_path)
-    if not versions:
-        return spark.createDataFrame([], "classification string, cnt bigint")
-    return spark.read.parquet(
-        os.path.join(state_path, "counts", f"v={versions[-1]}")
-    )
-
-
-def compact_state(spark: SparkSession, state_path: str) -> int:
-    """Compact the committed history into one version: union all
-    committed processed dirs into a single dir, carry the latest counts
-    forward, and atomically swap the commit log to reference just the
-    compacted version.  Old dirs become orphans (best-effort removed)
-    — a crash anywhere before the log swap leaves
-    the previous log intact and the new dirs ignored, preserving the
-    protocol's invariant that readers only see committed versions.
-
-    At scale this runs periodically (or when the committed-version list
-    exceeds a threshold) so the per-batch anti-join reads one compacted
-    processed table plus a short tail, not one dir per historical batch.
-    Returns the number of versions compacted."""
-    import shutil
-
-    versions = _committed_versions(state_path)
-    if len(versions) <= 1:
-        return 0
-    compact_v = f"compact-{versions[-1]}"
-    processed = spark.read.parquet(
-        *[os.path.join(state_path, "processed", f"b={v}") for v in versions]
-    ).distinct()
-    processed.write.mode("overwrite").parquet(
-        os.path.join(state_path, "processed", f"b={compact_v}")
-    )
-    read_counts(spark, state_path).write.mode("overwrite").parquet(
-        os.path.join(state_path, "counts", f"v={compact_v}")
-    )
-    _commit(state_path, [compact_v])
-    root = local_path(state_path)
-    for v in versions:  # best-effort orphan cleanup
-        shutil.rmtree(os.path.join(root, "processed", f"b={v}"), ignore_errors=True)
-        shutil.rmtree(os.path.join(root, "counts", f"v={v}"), ignore_errors=True)
-    return len(versions)
+    counts = _read(spark, state_path, [_COUNTS])
+    return counts.filter(F.col("cnt") != 0).select("classification", "cnt")
 
 
 def run_incremental_counts(
     envelopes: DataFrame, state_path: str, checkpoint_path: str
 ):
     """Maintain the count-by-classification aggregate incrementally
-    from an envelope stream (availableNow).  See the module docstring
-    for the versioned-commit (MVCC-lite) exactly-once protocol."""
-    import hashlib
-
-    spark = envelopes.sparkSession
-    run_id = hashlib.md5(checkpoint_path.encode()).hexdigest()[:8]
+    from an envelope stream (availableNow).  A batch anti-joins against
+    the processed log, folds the deltas into the counts and commits the
+    counts and the grown log as one version; a replayed batch finds all
+    its events processed and changes nothing."""
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        version = f"{run_id}-{batch_id}"
-        committed = _committed_versions(state_path)
-        if version in committed:
-            return  # same-run replay of a fully committed batch: no-op
-        fresh = batch_df.dropDuplicates(["ts_ms", "seq"])
-        if committed:
-            seen = spark.read.parquet(
-                *[
-                    os.path.join(state_path, "processed", f"b={v}")
-                    for v in committed
-                ]
-            )
-            fresh = fresh.join(seen, ["ts_ms", "seq"], "left_anti")
-        fresh = fresh.localCheckpoint(eager=True)  # pin before state writes
-        deltas = classification_deltas(fresh)
-        if committed:
-            state = apply_agg_deltas(read_counts(spark, state_path), deltas)
-        else:
-            state = deltas.select(
-                "classification", F.col("delta").alias("cnt")
-            ).filter(F.col("cnt") != 0)
-        # stage both outputs under this batch's version, then commit by
-        # rewriting the log with one more line; a crash mid-staging leaves
-        # orphans the replay overwrites, never a half-applied state
-        state.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-            os.path.join(state_path, "counts", f"v={version}")
+        spark = batch_df.sparkSession
+        seen = _read(spark, state_path, [_SEEN]).select("ts_ms", "seq")
+        # lazy pin: the deltas and the grown log prune it to different
+        # columns, so unpinned the commit would deduplicate the batch twice
+        fresh = (
+            batch_df.dropDuplicates(["ts_ms", "seq"])
+            .join(seen, ["ts_ms", "seq"], "left_anti")
+            .localCheckpoint(eager=False)
         )
-        fresh.select("ts_ms", "seq").write.mode("overwrite").parquet(
-            os.path.join(state_path, "processed", f"b={version}")
+        # groups at zero stay stored: a counts partition the commit
+        # lacked would carry the previous counts over
+        counts = _fold(
+            _read(spark, state_path, [_COUNTS]).select("classification", "cnt"),
+            _deltas(fresh),
+        ).withColumn("__part", F.lit("counts"))
+        keys = seen.unionByName(fresh.select("ts_ms", "seq"))
+        commit_table(
+            counts.unionByName(
+                keys.withColumn("__part", F.lit("seen")), allowMissingColumns=True
+            ),
+            state_path,
+            "__part",
         )
-        _commit(state_path, committed + [version])
 
     return (
         envelopes.writeStream.foreachBatch(merge_batch)

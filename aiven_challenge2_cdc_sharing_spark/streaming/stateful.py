@@ -55,70 +55,3 @@ def running_user_profiles(events: DataFrame) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-# ---------------------------------------------------------------------------
-# The same operator on the Spark 4.x transformWithStateInPandas API
-# (SPARK-49101 "State API v2"): an object-style StatefulProcessor with
-# named, schema'd state variables instead of a single opaque tuple —
-# the composable replacement for applyInPandasWithState above.  Both
-# implementations stay side by side deliberately: identical semantics,
-# two API generations, one parity test.
-# ---------------------------------------------------------------------------
-
-try:  # pragma: no cover - import guard exercised by CI environments
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    # the state-v2 wire protocol is protobuf-based; PySpark only imports
-    # it lazily inside the streaming worker, so probe here to fail fast
-    # with a clear message instead of a mid-query worker crash
-    import google.protobuf  # noqa: F401
-
-    _HAS_TWS = True
-except ImportError:  # Spark < 4.0, or protobuf not installed
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-    _HAS_TWS = False
-
-
-class RunningProfileProcessor(StatefulProcessor):
-    """Per-user running (count, value-sum) profile with ValueState."""
-
-    def init(self, handle: "StatefulProcessorHandle") -> None:
-        self._profile = handle.getValueState("profile", STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key: tuple, rows: Iterator[pd.DataFrame], timer_values
-    ) -> Iterator[pd.DataFrame]:
-        if self._profile.exists():
-            n, total = self._profile.get()
-        else:
-            n, total = 0, 0.0
-        for pdf in rows:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        self._profile.update((n, total))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [round(total, 2)],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def running_user_profiles_v2(events: DataFrame) -> DataFrame:
-    """Streaming: cumulative per-user profile via the state-v2 API."""
-    if not _HAS_TWS:  # pragma: no cover
-        raise NotImplementedError(
-            "transformWithStateInPandas requires Spark >= 4.0 and the "
-            "protobuf package (its state-server wire protocol)"
-        )
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningProfileProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )

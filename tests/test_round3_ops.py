@@ -310,17 +310,26 @@ def test_streaming_dedup_ingest_replay_is_noop(spark, tmpdir):
 
 def test_matmul_assignment_parity_with_hof(spark, sf_dir):
     # the BLAS fast path must agree with the JVM expression argmin
-    # (same init, same tiebreak); disagreement is possible only on
-    # float near-ties, which the synthetic embeddings don't produce
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    hof = semantic_dedup_pairs(
-        emb, threshold=0.30, n_clusters=8, assign_strategy="hof"
+    # (same centroids, same tiebreak); disagreement is possible only on
+    # float near-ties, which the synthetic embeddings don't produce.
+    # 33 lists is past the threshold, so training itself takes the BLAS
+    # path and its per-pass localCheckpoint
+    from aiven_challenge2_cdc_sharing_spark.operators.similarity import (
+        _assign_nearest,
+        _assign_nearest_matmul,
+        train_ivf_centroids,
     )
-    mm = semantic_dedup_pairs(
-        emb, threshold=0.30, n_clusters=8, assign_strategy="matmul"
+
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    as_set = lambda df: {(r.id_a, r.id_b, r.sim) for r in df.collect()}
-    assert as_set(hof) == as_set(mm)
+    as_set = lambda df: {(r.vec_id, r.c) for r in df.collect()}  # noqa: E731
+    for n_lists in (8, 33):
+        cents = train_ivf_centroids(emb, n_lists).localCheckpoint()
+        assert cents.count() == n_lists
+        hof = as_set(_assign_nearest(emb, cents, "embedding", "c"))
+        assert len(hof) == emb.count() and len({c for _, c in hof}) > 1
+        assert hof == as_set(_assign_nearest_matmul(emb, cents, "embedding", "c"))
 
 
 def test_pca_matches_numpy_eigendecomposition(spark, sf_dir):

@@ -82,11 +82,8 @@ def test_global_prefix_sum_matches_window(spark):
     df = spark.range(1000).select(
         F.col("id").alias("k"), ((F.col("id") * 37) % 11 - 5).alias("v")
     )
-    got = {
-        r["k"]: r["ps"]
-        for r in global_prefix_sum(df, [F.col("k")], "v", out_col="ps")
-        .collect()
-    }
+    ps, _total, _n = global_prefix_sum(df, [F.col("k")], "v", out_col="ps")
+    got = {r["k"]: r["ps"] for r in ps.collect()}
     w = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, 0)
     want = {
         r["k"]: r["ps"]
@@ -115,17 +112,16 @@ def test_global_prefix_sum_property(spark):
     def check(vals):
         rows = [(i, v) for i, v in enumerate(vals)]
         df = spark.createDataFrame(rows, "k long, v long")
-        got = {
-            r["k"]: r["ps"]
-            for r in global_prefix_sum(
-                df, [F.col("k")], "v", out_col="ps", partitions=7
-            ).collect()
-        }
+        ps, total, n_rows = global_prefix_sum(
+            df, [F.col("k")], "v", out_col="ps", partitions=7
+        )
+        got = {r["k"]: r["ps"] for r in ps.collect()}
         acc, want = 0, {}
         for i, v in enumerate(vals):
             acc += v
             want[i] = acc
         assert got == want
+        assert (total, n_rows) == (acc, len(vals))
 
     check()
 

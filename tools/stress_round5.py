@@ -50,7 +50,7 @@ def main():
     )
     timed(
         f"global_prefix_sum over {n:,} rows",
-        lambda: global_prefix_sum(pts, [F.col("t")], "d", out_col="ps")
+        lambda: global_prefix_sum(pts, [F.col("t")], "d", out_col="ps")[0]
         .agg(F.max("ps"))
         .collect()[0][0],
     )
