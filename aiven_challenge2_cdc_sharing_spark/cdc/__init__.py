@@ -1,10 +1,8 @@
 from .algebra import (
     check_constraints,
     from_wire_quarantine,
-    extract_key,
     filter_source_table,
     from_wire,
-    route_ops,
     to_wire,
     unwrap,
 )
@@ -15,14 +13,12 @@ from .scd2 import scd2_history
 __all__ = [
     "apply_changes",
     "check_constraints",
-    "extract_key",
     "filter_source_table",
     "from_wire",
     "from_wire_quarantine",
     "generate_customer_rows",
     "generate_envelope_log",
     "latest_snapshot",
-    "route_ops",
     "scd2_history",
     "snapshot_at",
     "to_wire",

@@ -23,11 +23,11 @@ from ..schemas import CDC_WIRE_KEY, CDC_WIRE_VALUE
 META_COLS = ("__deleted", "ts_ms", "seq")
 
 
-def filter_source_table(envelopes: DataFrame, table: str = "customer") -> DataFrame:
+def filter_source_table(envelopes: DataFrame) -> DataFrame:
     """P5 — source-side include-list (terraform/main.tf:250; publication
-    FOR TABLE, setup_cdc.pgsql:35).  A plain filter: Catalyst pushes it
-    into the scan."""
-    return envelopes.filter(F.col("source_table") == table)
+    FOR TABLE, setup_cdc.pgsql:35): the ``customer`` table.  A plain
+    filter: Catalyst pushes it into the scan."""
+    return envelopes.filter(F.col("source_table") == "customer")
 
 
 def _image(deleted: Column) -> Column:
@@ -55,19 +55,14 @@ def unwrap(envelopes: DataFrame) -> DataFrame:
     ).select("row.*", "__deleted", "ts_ms", "seq")
 
 
-def extract_key(unwrapped: DataFrame, key_col: str = "id") -> DataFrame:
-    """P3 — ValueToKey (terraform/main.tf:257-258): materialize the key
-    column; callers repartition by it for per-key ordered apply."""
-    return unwrapped.withColumn("__key", F.col(key_col))
-
-
 N_WIRE_PARTITIONS = 4
 
 
-def to_wire(unwrapped: DataFrame, n_partitions: int = N_WIRE_PARTITIONS) -> DataFrame:
-    """S4 — serialize to the post-SMT wire shape (schemas.CDC_WIRE):
-    JSON key {"id":N}, JSON flattened value (deletes keep the row with
-    "__deleted":"true" per delete.handling.mode=rewrite), plus a trailing
+def to_wire(unwrapped: DataFrame) -> DataFrame:
+    """S4 — serialize to the post-SMT wire shape (key_json, value_json,
+    partition, offset): JSON key {"id":N} (the ValueToKey key struct, P3,
+    terraform/main.tf:257-258), JSON flattened value (deletes keep the row
+    with "__deleted":"true" per delete.handling.mode=rewrite), plus a trailing
     tombstone record per delete (drop.tombstones=false,
     terraform/main.tf:255).
 
@@ -91,7 +86,7 @@ def to_wire(unwrapped: DataFrame, n_partitions: int = N_WIRE_PARTITIONS) -> Data
     base = (
         unwrapped.withColumn(
             "partition",
-            F.pmod(F.xxhash64(F.col("id")), F.lit(n_partitions)).cast("int"),
+            F.pmod(F.xxhash64(F.col("id")), F.lit(N_WIRE_PARTITIONS)).cast("int"),
         )
         .withColumn("__rn", F.row_number().over(w))
     )
@@ -164,15 +159,6 @@ def from_wire_quarantine(wire: DataFrame) -> tuple[DataFrame, DataFrame]:
     )
     quarantined = parsed.filter(bad).select("key_json", "value_json", "offset")
     return _wire_rows(parsed.filter(~bad)), quarantined
-
-
-def route_ops(unwrapped: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """P6 — op-type dispatch (consumer_to_opensearch.py:70-96): split into
-    (upserts, deletes).  Set-oriented: both halves are lazy filters over
-    the same scan, no driver-side loop."""
-    upserts = unwrapped.filter(~F.col("__deleted"))
-    deletes = unwrapped.filter(F.col("__deleted"))
-    return upserts, deletes
 
 
 def check_constraints(rows: DataFrame) -> tuple[DataFrame, DataFrame]:

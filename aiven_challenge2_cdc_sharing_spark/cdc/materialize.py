@@ -93,29 +93,16 @@ def apply_changes(
     )
 
 
-def merge_state(
-    state: DataFrame,
-    batch: DataFrame,
-    key_cols: Sequence[str] = ("id",),
-    order_cols: Sequence[str] = ("ts_ms", "seq"),
-) -> DataFrame:
+def merge_state(state: DataFrame, batch: DataFrame) -> DataFrame:
     """Incremental maintenance of a ``latest_state`` table: both sides
     carry metadata (incl. tombstones), so merging is closed under
     arbitrary batch boundaries, replay, and reordering.  The result has
     the columns of both sides: a column the batch adds is NULL for the
     state's rows, one it lacks is NULL for its own."""
-    return latest_state(state.unionByName(batch, allowMissingColumns=True),
-                        key_cols, order_cols)
+    return latest_state(state.unionByName(batch, allowMissingColumns=True))
 
 
-def snapshot_at(
-    changes: DataFrame,
-    ts_ms: int,
-    key_cols: Sequence[str] = ("id",),
-    order_cols: Sequence[str] = ("ts_ms", "seq"),
-) -> DataFrame:
+def snapshot_at(changes: DataFrame, ts_ms: int) -> DataFrame:
     """J5 — point-in-time reconstruction: state as of event-time T.
     The filter is pushed below the window shuffle by Catalyst."""
-    return latest_snapshot(
-        changes.filter(F.col("ts_ms") <= ts_ms), key_cols, order_cols
-    )
+    return latest_snapshot(changes.filter(F.col("ts_ms") <= ts_ms))

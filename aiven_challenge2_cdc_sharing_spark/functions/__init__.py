@@ -1,6 +1,5 @@
 from .text import (
     doc_fingerprint,
-    lang_id_stopwords,
     quality_score,
     token_count,
     tokenize,
@@ -8,7 +7,6 @@ from .text import (
 
 __all__ = [
     "doc_fingerprint",
-    "lang_id_stopwords",
     "quality_score",
     "token_count",
     "tokenize",

@@ -27,33 +27,14 @@ def token_count(col: Column) -> Column:
     return F.size(tokenize(col))
 
 
-def bpe_ish_token_count(col: Column) -> Column:
-    """Subword-ish token count: splits on whitespace AND word/number/
-    punctuation boundaries — a cheap regex stand-in for BPE tokenizers,
-    useful as a budget estimator at scale."""
-    return F.size(
-        F.filter(
-            F.split(F.lower(col), r"(\s+|(?<=[a-z])(?=[0-9])|(?<=[0-9])(?=[a-z]))"),
-            lambda t: F.length(t) > 0,
-        )
-    )
-
-
 def distinct_token_ratio(col: Column) -> Column:
     tok = tokenize(col)
     return F.size(F.array_distinct(tok)) / F.size(tok)
 
 
-def stopword_hits(col: Column, stopwords: list[str] | None = None) -> Column:
-    sw = F.array(*[F.lit(s) for s in (stopwords or EN_STOPWORDS)])
+def stopword_hits(col: Column) -> Column:
+    sw = F.array(*[F.lit(s) for s in EN_STOPWORDS])
     return F.size(F.filter(tokenize(col), lambda t: F.array_contains(sw, t)))
-
-
-def lang_id_stopwords(col: Column, threshold: float = 0.05) -> Column:
-    """Heuristic language ID: fraction of tokens that are English
-    stopwords >= threshold -> 'en', else 'unknown'."""
-    frac = stopword_hits(col) / token_count(col)
-    return F.when(frac >= threshold, F.lit("en")).otherwise(F.lit("unknown"))
 
 
 def quality_score(col: Column) -> Column:

@@ -44,8 +44,7 @@ def mean_vector_norm(emb: pd.Series) -> float:
     return float(np.sqrt((mat * mat).sum(axis=1)).round(6).mean())
 
 
-def label_centroids(embeddings: DataFrame, vec_col: str = "embedding",
-                    label_col: str = "label", dim: int = 64) -> DataFrame:
+def label_centroids(embeddings: DataFrame) -> DataFrame:
     """Grouped-map applyInPandas: per-label mean vector (centroid).
 
     Arrow moves each group as one batch; numpy reduces it.  At scale
@@ -61,16 +60,16 @@ def label_centroids(embeddings: DataFrame, vec_col: str = "embedding",
     )
 
     def centroid(pdf: pd.DataFrame) -> pd.DataFrame:
-        mat = np.stack(pdf[vec_col].apply(lambda v: np.asarray(v, dtype=np.float64)))
+        mat = np.stack(pdf["embedding"].apply(lambda v: np.asarray(v, dtype=np.float64)))
         return pd.DataFrame(
             {
-                "label": [int(pdf[label_col].iloc[0])],
+                "label": [int(pdf["label"].iloc[0])],
                 "n": [len(pdf)],
                 "centroid": [mat.mean(axis=0).tolist()],
             }
         )
 
-    return embeddings.groupBy(label_col).applyInPandas(centroid, out_schema)
+    return embeddings.groupBy("label").applyInPandas(centroid, out_schema)
 
 
 def source_stats_arrow(docs):

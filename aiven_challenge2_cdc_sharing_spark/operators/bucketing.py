@@ -20,16 +20,15 @@ def write_bucketed(
     table_name: str,
     bucket_col: str,
     num_buckets: int = 8,
-    sort_col: str | None = None,
 ) -> None:
     writer = df.write.mode("overwrite").bucketBy(num_buckets, bucket_col)
-    writer = writer.sortBy(sort_col or bucket_col)
+    writer = writer.sortBy(bucket_col)
     writer.saveAsTable(table_name)
 
 
 def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: str, how: str = "inner"
+    spark: SparkSession, left_table: str, right_table: str, on: str
 ) -> DataFrame:
     """Join two same-bucketed catalog tables; with matching bucket specs
     Catalyst elides both Exchanges (verified by plan test)."""
-    return spark.table(left_table).join(spark.table(right_table), on, how)
+    return spark.table(left_table).join(spark.table(right_table), on)

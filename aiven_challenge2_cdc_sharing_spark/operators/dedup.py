@@ -52,23 +52,16 @@ def shingles(col: Column, n: int = 3) -> Column:
     return F.array_distinct(zipped)
 
 
-def with_shingles(
-    df: DataFrame, text_col: str, n: int = 3, out_col: str = "__sh"
-) -> DataFrame:
-    """Append a shingle-array column, materializing the token array
+def with_shingles(df: DataFrame, text_col: str, n: int = 3) -> DataFrame:
+    """Append the ``__sh`` shingle-array column, materializing the token array
     first so the expensive split() is evaluated once per row.  The
     intermediate alias is referenced many times, which stops
     CollapseProject from re-inlining it."""
     return (
         df.withColumn("__tok", tokens(F.col(text_col)))
-        .withColumn(out_col, shingles(F.col("__tok"), n))
+        .withColumn("__sh", shingles(F.col("__tok"), n))
         .drop("__tok")
     )
-
-
-def exact_dedup(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Exact dedup on columns; arbitrary survivor (dropDuplicates)."""
-    return df.dropDuplicates(cols)
 
 
 def exact_dedup_by_fingerprint(
@@ -84,10 +77,9 @@ def exact_dedup_by_fingerprint(
     )
 
 
-def minhash_signature(
-    df: DataFrame, text_col: str, num_hashes: int = 16, shingle_n: int = 3
-) -> DataFrame:
-    """Append ``minhash`` (array<bigint> of length num_hashes).
+def minhash_signature(df: DataFrame, text_col: str, num_hashes: int = 16) -> DataFrame:
+    """Append ``minhash`` (array<bigint> of length num_hashes) over word
+    3-shingles.
 
     h_i(S) = min over shingles of xxhash64(i, shingle) — the standard
     salted-hash-family MinHash; computed per-row, fully parallel.
@@ -107,7 +99,7 @@ def minhash_signature(
     for 5000 sf0.1 docs at k=16; same inlining hazard the ``shingles``
     docstring documents).  Values are identical: the loops are merely
     interchanged (min over h of xxhash64(h, i) per i)."""
-    with_sh = with_shingles(df, text_col, shingle_n)
+    with_sh = with_shingles(df, text_col)
     base = F.transform(F.col("__sh"), lambda s: F.xxhash64(s))
     with_base = with_sh.withColumn("__hb", base).drop("__sh")
     long_max = (1 << 63) - 1
@@ -199,7 +191,6 @@ def jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Exact shingle-Jaccard for candidate pairs (the verify step).
 
@@ -240,7 +231,7 @@ def jaccard_pairs(
     A candidate pair with ZERO shingle overlap emits no row (filtered
     before the division) — below any useful threshold by
     construction, and every caller filters on one."""
-    sh = with_shingles(df, text_col, shingle_n)
+    sh = with_shingles(df, text_col)
     arrs = sh.select(F.col(id_col).alias("__jid"), "__sh")
     a = arrs.select(F.col("__jid").alias("id_a"), F.col("__sh").alias("__sh_a"))
     b = arrs.select(F.col("__jid").alias("id_b"), F.col("__sh").alias("__sh_b"))
@@ -268,7 +259,6 @@ def jaccard_pairs_postings(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Posting-count twin of ``jaccard_pairs`` (the pre-round-12
     default, kept for the measured comparison and the parity pin).
@@ -284,7 +274,7 @@ def jaccard_pairs_postings(
     11-12).  Still the better shape when candidate pairs are fat-doc
     dominated (huge |A| with tiny overlap), where the pair grain would
     ship large arrays to compute a small count."""
-    sh = with_shingles(df, text_col, shingle_n)
+    sh = with_shingles(df, text_col)
     ex = sh.select(
         F.col(id_col).alias("__jid"),
         F.size("__sh").alias("__sz"),
@@ -341,9 +331,9 @@ def _simhash_from_hashes(bits: int) -> tuple[Column, Column]:
     return votes, sig
 
 
-def simhash64(df: DataFrame, text_col: str, out_col: str = "simhash") -> DataFrame:
-    """64-bit SimHash from token hashes: for each bit b, sum +/-1 votes
-    over tokens; set bit where the vote is positive.  Single-pass
+def simhash64(df: DataFrame, text_col: str) -> DataFrame:
+    """Append ``simhash``, a 64-bit SimHash from token hashes: for each
+    bit b, sum +/-1 votes over tokens; set bit where the vote is positive.  Single-pass
     vote-array formulation (see ``_simhash_from_hashes``)."""
     hashed = df.withColumn(
         "__th",
@@ -354,7 +344,7 @@ def simhash64(df: DataFrame, text_col: str, out_col: str = "simhash") -> DataFra
     votes, sig = _simhash_from_hashes(64)
     return (
         hashed.withColumn("__votes", votes)
-        .withColumn(out_col, sig)
+        .withColumn("simhash", sig)
         .drop("__th", "__votes")
     )
 
@@ -362,8 +352,8 @@ def simhash64(df: DataFrame, text_col: str, out_col: str = "simhash") -> DataFra
 SIMHASH_MD5_BITS = 60  # 15 hex chars of md5 -> fits BIGINT with headroom
 
 
-def simhash_md5(df: DataFrame, text_col: str, out_col: str = "simhash") -> DataFrame:
-    """Cross-engine SimHash: token hash = first 15 hex chars of
+def simhash_md5(df: DataFrame, text_col: str) -> DataFrame:
+    """Cross-engine ``simhash``: token hash = first 15 hex chars of
     md5(token) parsed base-16 (60 usable bits).  DuckDB computes the
     identical value via CAST(concat('0x', substr(md5(t),1,15)) AS
     BIGINT), so the signature — and the banded Hamming near-pair join
@@ -380,7 +370,7 @@ def simhash_md5(df: DataFrame, text_col: str, out_col: str = "simhash") -> DataF
     votes, sig = _simhash_from_hashes(SIMHASH_MD5_BITS)
     return (
         hashed.withColumn("__votes", votes)
-        .withColumn(out_col, sig)
+        .withColumn("simhash", sig)
         .drop("__th", "__votes")
     )
 
@@ -388,30 +378,28 @@ def simhash_md5(df: DataFrame, text_col: str, out_col: str = "simhash") -> DataF
 def simhash_near_pairs(
     sigs: DataFrame,
     id_col: str,
-    sig_col: str = "simhash",
-    bands: int = 4,
-    band_bits: int = 15,
     max_hamming: int = 10,
     max_bucket_size: int | None = 10_000,
 ) -> DataFrame:
-    """Near-dup pairs from SimHash signatures: band the signature into
-    ``bands`` contiguous ``band_bits``-bit slices, bucket-join on any
-    equal band (pigeonhole: Hamming < bands ⇒ some band matches, so
-    recall is exact for distance < bands and approximate above), then
+    """Near-dup pairs from ``simhash`` signatures: band the signature into
+    4 contiguous 15-bit slices, bucket-join on any
+    equal band (pigeonhole: Hamming < 4 ⇒ some band matches, so
+    recall is exact for distance < 4 and approximate above), then
     verify bit_count(a XOR b) <= max_hamming on candidates only.
 
     Scale shape mirrors lsh_candidate_pairs: shuffle carries
     (band_idx, band_val, id) longs — never documents — cost is
     sum(bucket²) with the same hot-bucket cap."""
+    bands, band_bits = 4, 15
     banded = sigs.select(
         F.col(id_col).alias("__id"),
-        F.col(sig_col).alias("__sig"),
+        F.col("simhash").alias("__sig"),
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(b).alias("band_idx"),
-                        F.shiftright(F.col(sig_col), b * band_bits)
+                        F.shiftright(F.col("simhash"), b * band_bits)
                         .bitwiseAND(F.lit((1 << band_bits) - 1))
                         .alias("band_val"),
                     )
@@ -446,7 +434,6 @@ def _shingle_postings(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    shingle_n: int,
     max_shingle_df: int | None,
 ) -> DataFrame:
     """Materialized (id, set-size, shingle) posting list shared by the
@@ -461,7 +448,7 @@ def _shingle_postings(
     broadcast form never pays.)  The localCheckpoint materializes the
     list once for both sides of the self-join — at scale this is the
     persisted posting list an index build would keep anyway."""
-    sh = with_shingles(df.select(id_col, text_col), text_col, shingle_n)
+    sh = with_shingles(df.select(id_col, text_col), text_col)
     if max_shingle_df is not None:
         ex_all = sh.select(F.col(id_col), F.explode("__sh").alias("__tok"))
         hot_row = (
@@ -496,7 +483,6 @@ def jaccard_threshold_join(
     id_col: str,
     text_col: str,
     threshold: float,
-    shingle_n: int = 3,
     max_shingle_df: int | None = None,
 ) -> DataFrame:
     """EXACT all-pairs Jaccard similarity self-join at ``threshold``
@@ -550,7 +536,7 @@ def jaccard_threshold_join(
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard rounded to
     6 dp AFTER the threshold filter on the unrounded value.
     """
-    ex = _shingle_postings(df, id_col, text_col, shingle_n, max_shingle_df)
+    ex = _shingle_postings(df, id_col, text_col, max_shingle_df)
     a = ex.select(
         F.col(id_col).alias("id_a"),
         F.col("__sz").alias("__sz_a"),
@@ -587,7 +573,6 @@ def containment_join(
     id_col: str,
     text_col: str,
     threshold: float,
-    shingle_n: int = 3,
     max_shingle_df: int | None = None,
 ) -> DataFrame:
     """DIRECTIONAL shingle containment C(A→B) = |A∩B| / |A| at
@@ -610,7 +595,7 @@ def containment_join(
     by id_b at >= threshold; containment rounded to 6 dp AFTER the
     threshold filter on the unrounded value.
     """
-    ex = _shingle_postings(df, id_col, text_col, shingle_n, max_shingle_df)
+    ex = _shingle_postings(df, id_col, text_col, max_shingle_df)
     a = ex.select(
         F.col(id_col).alias("id_a"),
         F.col("__sz").alias("__sz_a"),
@@ -641,8 +626,6 @@ def containment_join(
 
 def semantic_dedup_pairs(
     vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.40,
     n_clusters: int = 16,
     iters: int = 2,
@@ -650,8 +633,8 @@ def semantic_dedup_pairs(
 ) -> DataFrame:
     """Semantic near-dup pairs over an embedding column — the SemDeDup
     formulation (Abbas et al. 2023, arXiv:2303.09540): k-means-cluster
-    the vectors, then enumerate pairs ONLY within a cluster and keep
-    those with cosine >= ``threshold``.  This is the seventh dedup
+    the ``embedding`` vectors (ids ``vec_id``), then enumerate pairs
+    ONLY within a cluster and keep those with cosine >= ``threshold``.  This is the seventh dedup
     modality: where `dedup_embedding_cosine` buckets by fixed sign-bit
     hyperplanes (data-independent LSH), this one learns the partition
     from the data — clusters adapt to the embedding distribution, so
@@ -681,13 +664,13 @@ def semantic_dedup_pairs(
     from .similarity import _assign, _dot, _norm, train_ivf_centroids
 
     vecs = vectors.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__e")
+        F.col("vec_id"), F.col("embedding").cast("array<double>").alias("__e")
     )
     cents = train_ivf_centroids(
         vecs,
         n_clusters,
         iters=iters,
-        id_col=id_col,
+        id_col="vec_id",
         vec_col="__e",
     ).localCheckpoint(eager=False)
     assigned = _assign(vecs, cents, "__e", "__cluster", n_clusters).withColumn(
@@ -698,7 +681,7 @@ def semantic_dedup_pairs(
         # its first max_cluster_size members (by id) — unlike the LSH
         # hot-bucket cap, which excludes the bucket wholesale, because
         # a huge semantic cluster is exactly where the duplicates are
-        wc = Window.partitionBy("__cluster").orderBy(id_col)
+        wc = Window.partitionBy("__cluster").orderBy("vec_id")
         assigned = (
             assigned.withColumn("__rn", F.row_number().over(wc))
             .filter(F.col("__rn") <= max_cluster_size)
@@ -712,13 +695,13 @@ def semantic_dedup_pairs(
     assigned = assigned.localCheckpoint()
     a = assigned.select(
         "__cluster",
-        F.col(id_col).alias("id_a"),
+        F.col("vec_id").alias("id_a"),
         F.col("__e").alias("__ea"),
         F.col("__n").alias("__na"),
     )
     b = assigned.select(
         "__cluster",
-        F.col(id_col).alias("id_b"),
+        F.col("vec_id").alias("id_b"),
         F.col("__e").alias("__eb"),
         F.col("__n").alias("__nb"),
     )

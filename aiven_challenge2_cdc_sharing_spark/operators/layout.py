@@ -46,15 +46,14 @@ def zorder_by(
     col_a: str,
     col_b: str,
     n_partitions: int = 32,
-    bits: int = 16,
-    z_col: str = "__z",
 ) -> DataFrame:
-    """Lay ``df`` out along the Morton curve of (col_a, col_b):
+    """Lay ``df`` out along the Morton curve of (col_a, col_b), in a
+    ``__z`` column:
     range-partition by the z-value (each output file covers a compact
     curve segment = a small bounding box in both key dimensions), then
     sort within partitions so row-group stats are tight too.
 
-    Both columns are min-max normalized to the full ``bits`` range
+    Both columns are min-max normalized to the full 16-bit range
     first — REQUIRED, not cosmetic: with raw values, the column with
     the wider range owns all the high interleaved bits and the curve
     degenerates into a plain sort on that column (measured: the
@@ -64,7 +63,7 @@ def zorder_by(
     bounds = df.agg(
         F.min(col_a), F.max(col_a), F.min(col_b), F.max(col_b)
     ).collect()[0]
-    top = (1 << bits) - 1
+    top = (1 << 16) - 1
 
     def scaled(c: str, lo, hi) -> Column:
         if hi is None or lo is None or hi <= lo:
@@ -76,14 +75,13 @@ def zorder_by(
         ).cast("long")
 
     zdf = df.withColumn(
-        z_col,
+        "__z",
         interleave_bits(
             scaled(col_a, bounds[0], bounds[1]),
             scaled(col_b, bounds[2], bounds[3]),
-            bits,
         ),
     )
-    return zdf.repartitionByRange(n_partitions, z_col).sortWithinPartitions(z_col)
+    return zdf.repartitionByRange(n_partitions, "__z").sortWithinPartitions("__z")
 
 
 def zorder_write(
@@ -91,9 +89,8 @@ def zorder_write(
     path: str,
     col_a: str,
     col_b: str,
-    n_partitions: int = 8,
-    bits: int = 16,
 ) -> None:
-    """Write ``df`` to parquet laid out along the (col_a, col_b) Morton
-    curve; the z-column is internal and dropped from the output."""
-    zorder_by(df, col_a, col_b, n_partitions, bits).drop("__z").write.parquet(path)
+    """Write ``df`` to parquet in 8 files laid out along the (col_a,
+    col_b) Morton curve; the z-column is internal and dropped from the
+    output."""
+    zorder_by(df, col_a, col_b, 8).drop("__z").write.parquet(path)

@@ -86,11 +86,10 @@ def pca_top_component(
     vectors: DataFrame,
     vec_col: str,
     dim: int,
-    iters: int = 8,
     gram: str = "auto",
 ) -> DataFrame:
-    """(pos, loading): the top principal component by power iteration,
-    unit-norm, sign-fixed (largest-|loading| entry positive), loadings
+    """(pos, loading): the top principal component by 8 rounds of power
+    iteration, unit-norm, sign-fixed (largest-|loading| entry positive), loadings
     rounded to 6 dp.
 
     ``gram``: 'exploded' (pure-JVM d²-explode — bit-replayable by the
@@ -110,7 +109,7 @@ def pca_top_component(
     v = spark.range(dim).select(
         F.col("id").alias("j"), F.lit(1.0 / dim**0.5).alias("vj")
     )
-    for _ in range(iters):
+    for _ in range(8):
         # lazy checkpoint (round-12): w feeds the norm AND the rescale
         # join — uncut, the matvec join+aggregate planned twice per
         # iteration (guide §1.2)

@@ -41,21 +41,18 @@ def cosine(a: Column, b: Column) -> Column:
 def cosine_topk_bruteforce(
     vectors: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
     k: int = 10,
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector."""
-    v = F.col(vec_col).cast("array<double>")
-    q = F.col(query_vec_col).cast("array<double>")
+    """Exact top-k cosine neighbors (``vec_id``, ``embedding``) for each
+    query vector (``query_id``, ``query_vec``)."""
+    v = F.col("embedding").cast("array<double>")
+    q = F.col("query_vec").cast("array<double>")
     scored = vectors.crossJoin(F.broadcast(queries)).select(
-        F.col(query_id_col),
-        F.col(id_col),
+        F.col("query_id"),
+        F.col("vec_id"),
         F.round(cosine(v, q), 6).alias("sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.col("vec_id"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
@@ -242,15 +239,12 @@ def train_ivf_centroids(
 def cosine_topk_ivf(
     vectors: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
     k: int = 10,
     n_lists: int = 16,
     n_probe: int = 4,
 ) -> DataFrame:
-    """IVF search: vectors pre-assigned to their nearest centroid list;
+    """IVF search over the ``cosine_topk_bruteforce`` columns: vectors
+    pre-assigned to their nearest centroid list;
     each query scores only the ``n_probe`` nearest lists — candidate
     set ~ N * n_probe / n_lists, exact cosine within it.
 
@@ -263,19 +257,21 @@ def cosine_topk_ivf(
     Assignment is the JVM expression argmin up to 32 lists and the
     Arrow-batched BLAS one (``_assign_nearest_matmul``) past that,
     where the expression falls out of codegen."""
-    cents = train_ivf_centroids(
-        vectors, n_lists, id_col=id_col, vec_col=vec_col
-    ).localCheckpoint(eager=False)
+    cents = train_ivf_centroids(vectors, n_lists).localCheckpoint(eager=False)
     assigned = _assign(
-        vectors.select(id_col, vec_col), cents, vec_col, "__cluster", n_lists
+        vectors.select("vec_id", "embedding"),
+        cents,
+        "embedding",
+        "__cluster",
+        n_lists,
     )
     q = queries.select(
-        query_id_col, F.col(query_vec_col).cast("array<double>").alias("__qvec")
+        "query_id", F.col("query_vec").cast("array<double>").alias("__qvec")
     )
     qscored = q.join(F.broadcast(cents)).withColumn(
         "__csim", cosine(F.col("__qvec"), F.col("__cvec"))
     )
-    wq = Window.partitionBy(query_id_col).orderBy(F.desc("__csim"), F.col("__cid"))
+    wq = Window.partitionBy("query_id").orderBy(F.desc("__csim"), F.col("__cid"))
     # __qnrm hoisted per probe row (same bit-identical-norm discipline
     # as _assign_nearest): the in-cell scorer would otherwise
     # re-derive norm(qvec) once per CANDIDATE pair
@@ -283,23 +279,23 @@ def cosine_topk_ivf(
         qscored.withColumn("__rn", F.row_number().over(wq))
         .filter(F.col("__rn") <= n_probe)
         .select(
-            query_id_col,
+            "query_id",
             "__qvec",
             F.col("__cid").alias("__cluster"),
             _norm(F.col("__qvec")).alias("__qnrm"),
         )
     )
-    cand_v = F.col(vec_col).cast("array<double>")
+    cand_v = F.col("embedding").cast("array<double>")
     scored = assigned.join(F.broadcast(probes), "__cluster").select(
-        F.col(query_id_col),
-        F.col(id_col),
+        F.col("query_id"),
+        F.col("vec_id"),
         F.round(
             _dot(cand_v, F.col("__qvec"))
             / (_norm(cand_v) * F.col("__qnrm")),
             6,
         ).alias("sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.col("vec_id"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
@@ -307,9 +303,9 @@ def cosine_topk_ivf(
     )
 
 
-def hyperplanes(dim: int, bits: int, seed: int = 42) -> list[list[float]]:
-    """Deterministic random hyperplanes for sign-bit LSH."""
-    rng = np.random.default_rng(seed)
+def hyperplanes(dim: int, bits: int) -> list[list[float]]:
+    """Deterministic random hyperplanes (seed 42) for sign-bit LSH."""
+    rng = np.random.default_rng(42)
     return rng.standard_normal((bits, dim)).tolist()
 
 
@@ -327,19 +323,14 @@ def cosine_topk_lsh(
     vectors: DataFrame,
     queries: DataFrame,
     dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
     k: int = 10,
     bits: int = 4,
-    seed: int = 42,
-    probe_hamming: int = 1,
     max_bucket_size: int | None = 100_000,
     planes: list[list[float]] | None = None,
 ) -> DataFrame:
-    """Approximate top-k: candidates restricted to buckets within
-    ``probe_hamming`` bit flips of the query's bucket (multi-probe LSH).
+    """Approximate top-k over ``embedding`` vectors and ``query_vec``
+    queries: candidates restricted to buckets within one bit flip of the
+    query's bucket (multi-probe LSH).
 
     With b hyperplane bits, single-probe scans ~N/2**b candidates but a
     near neighbor falling on the wrong side of ONE plane is lost;
@@ -354,26 +345,24 @@ def cosine_topk_lsh(
     a bucket that is by definition poorly discriminated for a hard
     bound on per-query cost; at scale the real fix is more bits.
 
-    ``planes`` overrides the seeded random hyperplanes; axis-aligned
+    ``planes`` overrides the random hyperplanes (seed 42); axis-aligned
     unit planes make the bucketing exactly recomputable by an external
     SQL engine (the oracle trick `dedup_embedding_cosine` uses) at the
     cost of ignoring the data's covariance structure.
     """
     if planes is None:
-        planes = hyperplanes(dim, bits, seed)
-    v = F.col(vec_col).cast("array<double>")
-    q = F.col(query_vec_col).cast("array<double>")
+        planes = hyperplanes(dim, bits)
+    v = F.col("embedding").cast("array<double>")
+    q = F.col("query_vec").cast("array<double>")
     bucketed = vectors.withColumn("__bucket", lsh_bucket(v, planes))
     if max_bucket_size is not None:
-        wb = Window.partitionBy("__bucket").orderBy(id_col)
+        wb = Window.partitionBy("__bucket").orderBy("vec_id")
         bucketed = (
             bucketed.withColumn("__bn", F.row_number().over(wb))
             .filter(F.col("__bn") <= max_bucket_size)
             .drop("__bn")
         )
-    probe_masks = [0] + (
-        [1 << i for i in range(bits)] if probe_hamming >= 1 else []
-    )
+    probe_masks = [0] + [1 << i for i in range(bits)]
     qb = queries.withColumn("__qb", lsh_bucket(q, planes)).withColumn(
         "__bucket",
         F.explode(
@@ -381,11 +370,11 @@ def cosine_topk_lsh(
         ),
     )
     scored = bucketed.join(F.broadcast(qb), "__bucket").select(
-        F.col(query_id_col),
-        F.col(id_col),
+        F.col("query_id"),
+        F.col("vec_id"),
         F.round(cosine(v, q), 6).alias("sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.col("vec_id"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)

@@ -86,9 +86,8 @@ def heavy_hitters_exact(
     items: DataFrame,
     item_col: str,
     k: int,
-    count_col: str = "cnt",
 ) -> DataFrame:
-    """EXACT items with count > N/k plus their exact counts.
+    """EXACT items with count > N/k plus their exact counts (``cnt``).
 
     Pass 1 shrinks the universe to <= (k-1)*n_partitions candidates;
     pass 2 is a broadcast semi-join + groupBy over only those — the
@@ -102,8 +101,8 @@ def heavy_hitters_exact(
     return (
         items.join(F.broadcast(cand), item_col, "left_semi")
         .groupBy(item_col)
-        .agg(F.count(F.lit(1)).alias(count_col))
+        .agg(F.count(F.lit(1)).alias("cnt"))
         .crossJoin(F.broadcast(total))
-        .filter(F.col(count_col) > F.col("__n") / F.lit(k))
+        .filter(F.col("cnt") > F.col("__n") / F.lit(k))
         .drop("__n")
     )

@@ -18,24 +18,17 @@ def salted_join(
     dim: DataFrame,
     key: str,
     salt_buckets: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join a skewed fact against a smaller table with key salting:
+    """Inner equi-join a skewed fact against a smaller table with key salting:
     fact rows get an arbitrary-but-join-safe salt in [0, buckets) (the
     id-derived value can differ across task retries, which is harmless
     because every salt matches exactly one dim replica); the dim side
     is replicated once per salt value, so each hot key spreads over
     ``salt_buckets`` reducers instead of one.
 
-    Only ``inner`` and ``left`` are supported: under right/full outer,
-    every unmatched dim row would surface once per replica —
+    The join is inner: under right/full outer, every unmatched dim row
+    would surface once per replica —
     ``salt_buckets`` duplicate output rows."""
-    if how not in ("inner", "left"):
-        raise ValueError(
-            f"salted_join supports how='inner'|'left', got {how!r}: "
-            "right/full outer would emit one row per dim replica for "
-            "unmatched dim keys"
-        )
     salted_fact = skewed.withColumn(
         "__salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets))
     )
@@ -47,22 +40,21 @@ def salted_join(
             )
         ),
     )
-    out = salted_fact.join(replicas, on=[key, "__salt"], how=how)
+    out = salted_fact.join(replicas, on=[key, "__salt"])
     return out.drop("__salt")
 
 
-def salted_count(
-    df: DataFrame, key: str, salt_buckets: int = 16
-) -> DataFrame:
+def salted_count(df: DataFrame, key: str) -> DataFrame:
     """Two-phase aggregation for one dominant group: count per
-    (key, salt) first (spreads the hot group), then sum per key.
+    (key, salt) over 16 salts first (spreads the hot group), then sum
+    per key.
     Catalyst's partial aggregation usually makes this unnecessary for
     algebraic aggs; the pattern matters for non-partial-izable aggs
     (e.g. collect_list-then-process, exact distinct on huge groups)."""
     return (
         df.withColumn(
             "__salt",
-            F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets)),
+            F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(16)),
         )
         .groupBy(key, "__salt")
         .agg(F.count(F.lit(1)).alias("__partial"))

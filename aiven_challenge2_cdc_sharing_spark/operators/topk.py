@@ -1,10 +1,8 @@
 """Top-k operators (SURVEY.md §2.6).
 
-``top_k`` relies on Spark's TakeOrderedAndProject (per-partition heaps +
-driver merge — no global sort, no full shuffle).  ``top_k_per_group`` is
-the window formulation; Spark pushes a per-partition rank limit below
-the shuffle (WindowGroupLimit) so only k rows per group per partition
-shuffle."""
+``top_k_per_group`` is the window formulation; Spark pushes a
+per-partition rank limit below the shuffle (WindowGroupLimit) so only
+k rows per group per partition shuffle."""
 
 from __future__ import annotations
 
@@ -14,32 +12,26 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def top_k(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:
-    return df.orderBy(*order).limit(k)
-
-
 def top_k_per_group(
     df: DataFrame,
     group: Sequence[str],
     order: Sequence[Column],
     k: int,
-    rank_col: str = "rn",
 ) -> DataFrame:
+    """Rows ranked 1..k (``rn``) within each group."""
     w = Window.partitionBy(*group).orderBy(*order)
-    return df.withColumn(rank_col, F.row_number().over(w)).filter(
-        F.col(rank_col) <= k
-    )
+    return df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
 
 
 def global_ordinal(
     df: DataFrame,
     sort_cols: Sequence[Column],
     out_col: str = "global_pos",
-    partitions: int = 32,
 ) -> DataFrame:
     """Global 1-based ordinal over a total order WITHOUT a global
     window (the zipWithIndex pattern): range-partition by the sort
-    key so key ranges are ordered and non-overlapping, rank within
+    key into 32 partitions so key ranges are ordered and
+    non-overlapping, rank within
     each partition (window parallelism = partition count), then add
     broadcast cumulative partition offsets.  The only driver-side
     data is one row count per partition.
@@ -56,7 +48,7 @@ def global_ordinal(
     (percent_rank = (pos-1)/(N-1), cume_dist = pos/N) need no second
     pass."""
     ranged = (
-        df.repartitionByRange(partitions, *sort_cols)
+        df.repartitionByRange(32, *sort_cols)
         .withColumn("__pid", F.spark_partition_id())
         .localCheckpoint(eager=False)
     )

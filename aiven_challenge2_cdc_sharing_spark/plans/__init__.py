@@ -3,7 +3,6 @@ from .inspect import (
     has_broadcast_join,
     has_pushed_filters,
     scan_read_schema,
-    wholestage_codegen_spans,
 )
 
 __all__ = [
@@ -11,5 +10,4 @@ __all__ = [
     "has_broadcast_join",
     "has_pushed_filters",
     "scan_read_schema",
-    "wholestage_codegen_spans",
 ]

@@ -2,8 +2,8 @@
 
 The 100 TB contract of this engine is enforced here: tests assert that
 dimension joins broadcast, predicates reach the parquet scan
-(PushedFilters), scans prune columns (ReadSchema), and hot paths stay
-inside whole-stage codegen.  A query that silently regresses to a
+(PushedFilters) and scans prune columns (ReadSchema).  A query that
+silently regresses to a
 shuffle join or a full-schema scan fails the suite, not just the
 benchmark.
 """
@@ -15,19 +15,14 @@ import re
 from pyspark.sql import DataFrame
 
 
-def explain_str(df: DataFrame, mode: str = "formatted") -> str:
+def explain_str(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), mode
+        df._jdf.queryExecution(), "formatted"
     )
 
 
 def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in explain_str(df) or "BroadcastNestedLoopJoin" in explain_str(df)
-
-
-def has_shuffle_join(df: DataFrame) -> bool:
-    s = explain_str(df)
-    return "SortMergeJoin" in s or "ShuffledHashJoin" in s
 
 
 def has_pushed_filters(df: DataFrame, *fragments: str) -> bool:
@@ -45,11 +40,6 @@ def scan_read_schema(df: DataFrame) -> list[str]:
     for m in re.finditer(r"ReadSchema: struct<([^>]*)>", s):
         out.append([c.split(":")[0].strip() for c in m.group(1).split(",") if c])
     return out
-
-
-def wholestage_codegen_spans(df: DataFrame) -> int:
-    """Number of WholeStageCodegen regions (wider/fewer is better)."""
-    return len(set(re.findall(r"WholeStageCodegen \((\d+)\)", explain_str(df))))
 
 
 def num_exchanges(df: DataFrame) -> int:

@@ -1259,13 +1259,6 @@ def _bloom_pos_spark(key: str, i: int) -> "F.Column":
     )
 
 
-def _bloom_pos_duck(key: str, i: int) -> str:
-    return (
-        f"CAST(concat('0x', substr(md5(CAST({key} AS VARCHAR) || '#{i}'),"
-        f" 1, 15)) AS BIGINT) % {_BLOOM_M}"
-    )
-
-
 @register(
     "join_bloom_prefilter",
     oracle="""

@@ -43,18 +43,11 @@ CDC_ENVELOPE = T.StructType(
 )
 
 # Post-SMT wire record (reference terraform/main.tf:253-264: unwrap +
-# delete-rewrite + ValueToKey + schemaless JsonConverter).  value_json is
-# the flattened row (+"__deleted":"true" on deletes) or NULL (tombstone).
-CDC_WIRE = T.StructType(
-    [
-        T.StructField("key_json", T.StringType(), nullable=False),
-        T.StructField("value_json", T.StringType(), nullable=True),
-        T.StructField("partition", T.IntegerType(), nullable=False),
-        T.StructField("offset", T.LongType(), nullable=False),
-    ]
-)
-
-# Schema-on-read for the flattened wire value (consumer_to_opensearch.py:87-92)
+# delete-rewrite + ValueToKey + schemaless JsonConverter) is
+# (key_json, value_json, partition, offset), built by ``cdc.algebra.to_wire``.
+# value_json is the flattened row (+"__deleted":"true" on deletes) or NULL
+# (tombstone); these are its schema-on-read structs
+# (consumer_to_opensearch.py:87-92).
 CDC_WIRE_VALUE = T.StructType(
     list(CDC_CUSTOMER.fields)
     + [T.StructField("__deleted", T.StringType(), nullable=True)]

@@ -27,16 +27,12 @@ def create_table_if_not_exists(
     name: str,
     schema: T.StructType,
     location: str,
-    partition_by: tuple[str, ...] = (),
 ) -> None:
     """Idempotent external-table DDL with an explicit schema — the
     ensure-index-with-mapping pattern."""
-    part = (
-        f" PARTITIONED BY ({', '.join(partition_by)})" if partition_by else ""
-    )
     spark.sql(
         f"CREATE TABLE IF NOT EXISTS {name} ({_ddl(schema)}) "
-        f"USING PARQUET{part} LOCATION '{location}'"
+        f"USING PARQUET LOCATION '{location}'"
     )
 
 
@@ -45,14 +41,13 @@ def save_governed_copy(
     location: str,
     partition_by: tuple[str, ...] = (),
     sort_within_partitions_by: tuple[str, ...] = (),
-    mode: str = "overwrite",
 ) -> None:
-    """Write the governed (shared) copy of a table: partitioned for
+    """Overwrite the governed (shared) copy of a table: partitioned for
     pruning, sorted within files for row-group skipping."""
     out = df
     if sort_within_partitions_by:
         out = out.sortWithinPartitions(*sort_within_partitions_by)
-    writer = out.write.mode(mode)
+    writer = out.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(location)

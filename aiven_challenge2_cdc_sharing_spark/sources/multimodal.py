@@ -33,14 +33,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("media_type", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -215,30 +207,28 @@ def decode_wav(payload: bytes) -> tuple[int, int, int, float]:
     return nch, rate, nframes, amp
 
 
-def encode_wav_pcm16(
-    samples: list[int], sample_rate: int = 8000, channels: int = 1
-) -> bytes:
-    """Minimal valid 16-bit PCM WAV from integer samples."""
+def encode_wav_pcm16(samples: list[int], sample_rate: int = 8000) -> bytes:
+    """Minimal valid mono 16-bit PCM WAV from integer samples."""
     import io
     import wave
 
     buf = io.BytesIO()
     with wave.open(buf, "wb") as w:
-        w.setnchannels(channels)
+        w.setnchannels(1)
         w.setsampwidth(2)
         w.setframerate(sample_rate)
         w.writeframes(struct.pack(f"<{len(samples)}h", *samples))
     return buf.getvalue()
 
 
-def attach_fake_media(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Derive a deterministic binary payload column from text (UTF-8
+def attach_fake_media(docs: DataFrame) -> DataFrame:
+    """Derive a deterministic binary payload column from ``text`` (UTF-8
     bytes) so the multimodal plumbing is exercisable on the driver
     test tables, which carry no real media."""
     return docs.select(
         "doc_id",
         F.lit("image/fake").alias("media_type"),
-        F.encode(F.col(text_col), "UTF-8").cast("binary").alias("payload"),
+        F.encode(F.col("text"), "UTF-8").cast("binary").alias("payload"),
     )
 
 
@@ -285,8 +275,8 @@ REAL_FEATURE_SCHEMA = T.StructType(
 )
 
 
-def attach_png_media(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Encode each document's text into a REAL grayscale PNG payload:
+def attach_png_media(docs: DataFrame) -> DataFrame:
+    """Encode each document's ``text`` into a REAL grayscale PNG payload:
     width = n%16+1, height = n%8+1, pixels = the UTF-8 bytes cycled to
     width*height.  Deterministic, so an oracle can recompute the decoded
     features from the source text without touching the binary."""
@@ -308,7 +298,7 @@ def attach_png_media(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.select(
         "doc_id",
         F.lit("image/png").alias("media_type"),
-        to_png(F.col(text_col)).alias("payload"),
+        to_png(F.col("text")).alias("payload"),
     )
 
 
@@ -364,11 +354,9 @@ FRAME_SCHEMA = T.StructType(
 )
 
 
-def sample_frames(
-    media: DataFrame, frame_bytes: int = 32, every: int = 4
-) -> DataFrame:
+def sample_frames(media: DataFrame) -> DataFrame:
     """Frame sampling over an opaque binary payload (the video-pipeline
-    shape): chop the payload into fixed-size frames, keep every k-th
+    shape): chop the payload into 32-byte frames, keep every 4th
     full frame, emit one row per sampled frame with its checksum.  A
     real video pipeline swaps the chop for an ffmpeg keyframe extract
     behind the same mapInPandas seam; the Spark-side contract —
@@ -376,6 +364,8 @@ def sample_frames(
     column pruned unless asked for — is identical.
     """
     import hashlib
+
+    frame_bytes, every = 32, 4
 
     def sampler(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -401,8 +391,8 @@ def sample_frames(
     return media.mapInPandas(sampler, FRAME_SCHEMA)
 
 
-def attach_wav_media(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Encode each document's text into a REAL 16-bit PCM WAV payload:
+def attach_wav_media(docs: DataFrame) -> DataFrame:
+    """Encode each document's ``text`` into a REAL 16-bit PCM WAV payload:
     one mono sample per UTF-8 byte, s = (byte - 128) * 128, 8 kHz.
     Deterministic, so an oracle can recompute frame counts and mean
     amplitude directly from the source text (the audio twin of
@@ -420,5 +410,5 @@ def attach_wav_media(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.select(
         "doc_id",
         F.lit("audio/wav").alias("media_type"),
-        to_wav(F.col(text_col)).alias("payload"),
+        to_wav(F.col("text")).alias("payload"),
     )

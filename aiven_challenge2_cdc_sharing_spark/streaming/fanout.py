@@ -53,7 +53,6 @@ def run_shared_serving(
     envelopes: DataFrame,
     base_dir: str,
     checkpoint_path: str,
-    n_buckets: int = N_SNAPSHOT_BUCKETS,
 ) -> StreamingQuery:
     """Start the one-pass fan-out; returns the streaming query.
 
@@ -63,7 +62,7 @@ def run_shared_serving(
 
     def fanout(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        merge_snapshot_batch(batch_df, f"{base_dir}/state", n_buckets)
+        merge_snapshot_batch(batch_df, f"{base_dir}/state", N_SNAPSHOT_BUCKETS)
         # lazy: the first publish materializes it, the second reuses it
         snap = read_snapshot(spark, f"{base_dir}/state").localCheckpoint(
             eager=False

@@ -39,8 +39,6 @@ from pyspark.sql import functions as F
 
 from .runtime import commit_table, read_table
 
-_STATE = ("classification string", "cnt bigint", "ts_ms bigint", "seq bigint",
-         "__part string")
 _COUNTS, _SEEN = "__part=counts", "__part=seen"
 
 
@@ -87,18 +85,14 @@ def apply_agg_deltas(counts: DataFrame, deltas: DataFrame) -> DataFrame:
     return _fold(counts, deltas).filter(F.col("cnt") != 0)
 
 
-def _read(spark: SparkSession, state_path: str, parts: list[str]) -> DataFrame:
-    try:
-        return read_table(spark, state_path, parts)
-    except FileNotFoundError:  # before the first commit
-        # built JVM-side: ``createDataFrame([])`` starts Python workers
-        cols = [f"CAST(NULL AS {t}) AS {c}" for c, t in map(str.split, _STATE)]
-        return spark.range(0).selectExpr(*cols)
-
-
 def read_counts(spark: SparkSession, state_path: str) -> DataFrame:
     """Latest committed counts state (empty frame before first commit)."""
-    counts = _read(spark, state_path, [_COUNTS])
+    try:
+        counts = read_table(spark, state_path, [_COUNTS])
+    except FileNotFoundError:
+        return spark.range(0).selectExpr(
+            "CAST(NULL AS string) AS classification", "CAST(NULL AS bigint) AS cnt"
+        )
     return counts.filter(F.col("cnt") != 0).select("classification", "cnt")
 
 
@@ -113,21 +107,26 @@ def run_incremental_counts(
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        seen = _read(spark, state_path, [_SEEN]).select("ts_ms", "seq")
+        fresh = batch_df.dropDuplicates(["ts_ms", "seq"])
+        try:
+            seen = read_table(spark, state_path, [_SEEN]).select("ts_ms", "seq")
+            prior = read_table(spark, state_path, [_COUNTS]).select("classification", "cnt")
+            fresh = fresh.join(seen, ["ts_ms", "seq"], "left_anti")
+        except FileNotFoundError:  # the first batch: nothing seen or counted
+            seen = prior = None
         # lazy pin: the deltas and the grown log prune it to different
         # columns, so unpinned the commit would deduplicate the batch twice
-        fresh = (
-            batch_df.dropDuplicates(["ts_ms", "seq"])
-            .join(seen, ["ts_ms", "seq"], "left_anti")
-            .localCheckpoint(eager=False)
-        )
+        fresh = fresh.localCheckpoint(eager=False)
+        keys = fresh.select("ts_ms", "seq")
+        deltas = _deltas(fresh)
+        if prior is None:
+            counts = deltas.withColumnRenamed("delta", "cnt")
+        else:
+            keys = seen.unionByName(keys)
+            counts = _fold(prior, deltas)
         # groups at zero stay stored: a counts partition the commit
         # lacked would carry the previous counts over
-        counts = _fold(
-            _read(spark, state_path, [_COUNTS]).select("classification", "cnt"),
-            _deltas(fresh),
-        ).withColumn("__part", F.lit("counts"))
-        keys = seen.unionByName(fresh.select("ts_ms", "seq"))
+        counts = counts.withColumn("__part", F.lit("counts"))
         commit_table(
             counts.unionByName(
                 keys.withColumn("__part", F.lit("seen")), allowMissingColumns=True

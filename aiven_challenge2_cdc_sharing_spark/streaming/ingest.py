@@ -55,19 +55,18 @@ def run_dedup_ingest(
     docs_stream: DataFrame,
     corpus_path: str,
     checkpoint_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> StreamingQuery:
-    """Start the content-addressed ingest; returns the streaming query.
+    """Start the content-addressed ingest of (``doc_id``, ``text``)
+    documents; returns the streaming query.
 
-    The corpus parquet gains a ``__fp`` column (md5 of ``text_col``)
+    The corpus parquet gains a ``__fp`` column (md5 of ``text``)
     so later batches anti-join without recomputing old fingerprints.
     """
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        batch = batch_df.withColumn("__fp", F.md5(F.col(text_col)))
-        w = Window.partitionBy("__fp").orderBy(id_col)
+        batch = batch_df.withColumn("__fp", F.md5(F.col("text")))
+        w = Window.partitionBy("__fp").orderBy("doc_id")
         batch = (
             batch.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)

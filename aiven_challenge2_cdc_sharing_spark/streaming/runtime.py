@@ -184,7 +184,11 @@ def read_table(spark: SparkSession, path: str, parts: list[str] | None = None) -
     files = m["files"] if parts is None else {p: m["files"][p] for p in parts if p in m["files"]}
     names = tuple(sorted(f for fs in files.values() for f in fs))
     if not names:
-        return spark.createDataFrame([], StructType.fromJson(m["schema"]))
+        # built JVM-side: ``createDataFrame([])`` starts Python workers
+        schema = StructType.fromJson(m["schema"])
+        return spark.range(0).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+        )
     return _relation(spark, path, json.dumps(m["schema"]), tuple(sorted(files)), names)
 
 
@@ -223,12 +227,11 @@ def run_snapshot_maintenance(
     envelopes: DataFrame,
     snapshot_path: str,
     checkpoint_path: str,
-    available_now: bool = True,
-    n_buckets: int = N_SNAPSHOT_BUCKETS,
 ) -> StreamingQuery:
-    """T5 — continuously maintain the current-state snapshot table:
-    unwrap each micro-batch and MERGE it into the snapshot (upsert +
-    delete, last-writer-wins), the set-oriented version of the
+    """T5 — maintain the current-state snapshot table from every
+    envelope available now: unwrap each micro-batch and MERGE it into
+    the snapshot (upsert + delete, last-writer-wins), the set-oriented
+    version of the
     reference's per-event ``index(id=pk, body=doc)``
     (consumer_to_opensearch.py:94-95).
 
@@ -242,26 +245,26 @@ def run_snapshot_maintenance(
     user-facing view with ``read_snapshot``.
 
     Incremental storage: the state table is hash-partitioned into
-    ``n_buckets`` key-buckets (``__bucket=pmod(xxhash64(id), n)``) and a
+    ``N_SNAPSHOT_BUCKETS`` key-buckets
+    (``__bucket=pmod(xxhash64(id), n)``) and a
     micro-batch reads and rewrites ONLY the buckets its keys touch
     (``read_table``/``commit_table``): per-batch cost is O(touched
     buckets), not O(table), like Delta/Iceberg MERGE file pruning on
-    stock parquet.  Size ``n_buckets`` so one bucket is one executor's
+    stock parquet.  Size the bucket count so one bucket is one executor's
     comfortable rewrite unit; a batch of uniformly random keys touches
     every bucket (a full rewrite), but CDC batches are small and
     key-local.
     """
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        merge_snapshot_batch(batch_df, snapshot_path, n_buckets)
+        merge_snapshot_batch(batch_df, snapshot_path, N_SNAPSHOT_BUCKETS)
 
-    writer = (
+    return (
         envelopes.writeStream.foreachBatch(merge_batch)
         .option("checkpointLocation", checkpoint_path)
         .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_snapshot(spark: SparkSession, snapshot_path: str) -> DataFrame:
@@ -270,28 +273,15 @@ def read_snapshot(spark: SparkSession, snapshot_path: str) -> DataFrame:
 
 
 def windowed_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    window: str = "1 hour",
-    slide: str | None = None,
-    watermark: str = "10 minutes",
-    extra_keys: tuple[str, ...] = (),
+    events: DataFrame, window: str = "1 hour", slide: str | None = None
 ) -> DataFrame:
-    """T3/T4/T6 — watermarked tumbling (or sliding) window counts;
-    works identically on batch and streaming DataFrames (on batch the
-    watermark is a no-op, which is what makes the oracle check of the
-    batch twin meaningful)."""
-    win = (
-        F.window(F.col(ts_col), window, slide)
-        if slide
-        else F.window(F.col(ts_col), window)
-    )
-    df = events
-    if events.isStreaming:
-        df = events.withWatermark(ts_col, watermark)
-    return df.groupBy(win.alias("win"), *[F.col(k) for k in extra_keys]).agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
+    """T3/T4/T6 — tumbling (or sliding) window counts over ``ts`` with a
+    10-minute watermark; works identically on batch and streaming
+    DataFrames (on batch the watermark is a no-op, which is what makes
+    the oracle check of the batch twin meaningful)."""
+    win = F.window("ts", window, slide) if slide else F.window("ts", window)
+    df = events.withWatermark("ts", "10 minutes") if events.isStreaming else events
+    return df.groupBy(win.alias("win")).agg(F.count(F.lit(1)).alias("cnt"))
 
 
 def peek_one(

@@ -248,7 +248,14 @@ def isolated(names: list[str], reps: int) -> None:
     notes ran by hand: each named query measured alone, warm (one
     unmeasured warm-up rep), ``reps`` timed reps, min/avg reported.
     Usage: python bench.py --only a,b,c [--reps 3].  Does NOT touch
-    BENCH_FULL.json — the suite artifact stays the suite's."""
+    BENCH_FULL.json — the suite artifact stays the suite's.
+
+    Each timed rep of a registry query or twin also reports the seconds
+    and the Spark jobs of its DataFrame build and of its noop-sink
+    execution (``build_s``/``exec_s``/``build_jobs``/``exec_jobs``, one
+    entry per rep): wall time swings with host load, but the jobs a
+    query schedules (AQE stage materializations, eager actions,
+    collects, checkpoint copies) are a property of the code."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("bench")
     for t in ("customer", "orders", "lineitem", "events", "documents",
@@ -256,16 +263,36 @@ def isolated(names: list[str], reps: int) -> None:
         load_table(spark, sf_dir, t).count()
     registry = load_registry()
     twins = _twin_fns()
+    tracker = spark.sparkContext.statusTracker()
+    newest = [-1]  # the newest job id counted so far
+
+    def new_jobs() -> int:
+        ids = [j for j in tracker.getJobIdsForGroup(None) if j > newest[0]]
+        newest[0] = max(ids, default=newest[0])
+        return len(ids)
+
     for name in names:
+        phases = {}
         if name == "stream_cdc_snapshot_e2e":
             runs = [_stream_cdc_e2e(spark, sf_dir) for _ in range(1 + reps)]
         elif name in registry or name in twins:
             fn = twins[name] if name in twins else registry[name].fn
             runs = []
+            phases = {"build_s": [], "exec_s": [], "build_jobs": [], "exec_jobs": []}
             for _ in range(1 + reps):
+                new_jobs()
                 t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                runs.append(time.perf_counter() - t0)
+                df = fn(spark, sf_dir)
+                t1 = time.perf_counter()
+                phases["build_jobs"].append(new_jobs())
+                t2 = time.perf_counter()
+                df.write.format("noop").mode("overwrite").save()
+                t3 = time.perf_counter()
+                phases["exec_jobs"].append(new_jobs())
+                phases["build_s"].append(round(t1 - t0, 3))
+                phases["exec_s"].append(round(t3 - t2, 3))
+                runs.append((t1 - t0) + (t3 - t2))
+            phases = {k: v[1:] for k, v in phases.items()}  # rep 0 is the warm-up
         else:
             print(f"isolated: unknown query {name}", file=sys.stderr)
             continue
@@ -276,6 +303,7 @@ def isolated(names: list[str], reps: int) -> None:
             "min": round(min(timed), 3),
             "avg": round(sum(timed) / len(timed), 3),
             "all": [round(r, 3) for r in timed],
+            **phases,
         }), flush=True)
 
 

@@ -1,0 +1,208 @@
+"""The engine's public API holds only what its callers use.
+
+A static scan over every ``.py`` file in the repository (the package,
+``tests/``, ``tools/``, ``bench.py``, ``perfbench/``) finds, for the
+package outside ``queries/``:
+
+- the defaulted options of public functions that no call sets, by
+  keyword, by position or through ``*``/``**``;
+- the public names (functions, classes, module constants) that nothing
+  references besides their package's ``__init__`` re-export.
+
+An option no caller sets is a setting whose other values nothing runs;
+a name nothing calls is code nothing checks. No Spark is needed.
+"""
+
+from __future__ import annotations
+
+import ast
+import os
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = "aiven_challenge2_cdc_sharing_spark"
+
+# Deployment settings of the Kafka reader: the tests run the file source.
+KEPT_OPTIONS = {
+    f"{PKG}.sources.kafka_shape.kafka_stream_reader.topic",
+    f"{PKG}.sources.kafka_shape.kafka_stream_reader.starting_offsets",
+}
+
+
+def _modules() -> dict[str, tuple[str, ast.Module]]:
+    """Dotted module name -> (path, tree) for every .py file in the repo."""
+    out = {}
+    for dirpath, dirnames, filenames in os.walk(ROOT):
+        dirnames[:] = sorted(d for d in dirnames if not d.startswith((".", "__")))
+        for fn in filenames:
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fn)
+            rel = os.path.relpath(path, ROOT)[: -len(".py")].split(os.sep)
+            if rel[-1] == "__init__":
+                rel = rel[:-1]
+            with open(path, encoding="utf-8") as f:
+                out[".".join(rel)] = (path, ast.parse(f.read(), path))
+    return out
+
+
+def _is_package(path: str) -> bool:
+    return os.path.basename(path) == "__init__.py"
+
+
+class _Scan:
+    def __init__(self):
+        self.mods = _modules()
+        self.defs: dict[str, ast.AST] = {}  # qualname -> def/assign node
+        self.reexports: dict[str, str] = {}  # pkg.name -> target qualname
+        for mod, (path, tree) in self.mods.items():
+            for node in tree.body:
+                for name in self._bound_names(node):
+                    self.defs[f"{mod}.{name}"] = node
+            if _is_package(path):
+                for node in tree.body:
+                    if isinstance(node, ast.ImportFrom):
+                        base = self._from_base(mod, path, node)
+                        for a in node.names:
+                            self.reexports[f"{mod}.{a.asname or a.name}"] = f"{base}.{a.name}"
+
+    @staticmethod
+    def _bound_names(node) -> list[str]:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            return [node.name]
+        if isinstance(node, ast.Assign):
+            return [t.id for t in node.targets if isinstance(t, ast.Name)]
+        if isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+            return [node.target.id]
+        return []
+
+    def _from_base(self, mod: str, path: str, node: ast.ImportFrom) -> str:
+        if node.level:
+            parts = mod.split(".")
+            if not _is_package(path):
+                parts = parts[:-1]
+            parts = parts[: len(parts) - (node.level - 1)]
+            return ".".join(parts + ([node.module] if node.module else []))
+        if node.module in self.mods or not self._sibling(mod, node.module):
+            return node.module
+        return self._sibling(mod, node.module)
+
+    def _sibling(self, mod: str, name: str) -> str | None:
+        """Script-style import of a module beside ``mod`` (``import gen``)."""
+        cand = ".".join(mod.split(".")[:-1] + [name])
+        return cand if cand in self.mods and cand != name else None
+
+    def resolve(self, qual: str) -> str:
+        seen = set()
+        while qual in self.reexports and qual not in seen:
+            seen.add(qual)
+            qual = self.reexports[qual]
+        return qual
+
+    def _env(self, mod: str, path: str, tree: ast.Module) -> dict[str, str]:
+        env = {}
+        for q in self.defs:
+            owner, name = q.rsplit(".", 1)
+            if owner == mod:
+                env[name] = q
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.asname:
+                        env[a.asname] = self._sibling(mod, a.name) or a.name
+                    else:
+                        top = a.name.split(".")[0]
+                        env[top] = self._sibling(mod, top) or top
+            elif isinstance(node, ast.ImportFrom):
+                base = self._from_base(mod, path, node)
+                for a in node.names:
+                    env[a.asname or a.name] = f"{base}.{a.name}"
+        return env
+
+    def _target(self, env: dict[str, str], node) -> str | None:
+        if isinstance(node, ast.Name):
+            q = env.get(node.id)
+        elif isinstance(node, ast.Attribute):
+            base = self._target(env, node.value)
+            q = f"{base}.{node.attr}" if base else None
+        else:
+            return None
+        return self.resolve(q) if q else None
+
+    def run(self):
+        """(defaulted options -> set?, public name -> referenced?)."""
+        scope = {}
+        for q, node in self.defs.items():
+            owner, name = q.rsplit(".", 1)
+            if (owner.startswith(PKG) and not owner.startswith(f"{PKG}.queries")
+                    and not name.startswith("_") and not _is_package(self.mods[owner][0])):
+                scope[q] = node
+        options: dict[str, bool] = {}
+        positional_params: dict[str, list[str]] = {}
+        for q, node in scope.items():
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = node.args
+                positional = [p.arg for p in a.posonlyargs + a.args]
+                defaulted = positional[len(positional) - len(a.defaults):] if a.defaults else []
+                defaulted += [p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+                positional_params[q] = positional
+                for p in defaulted:
+                    options[f"{q}.{p}"] = False
+        referenced = {q: False for q in scope}
+        for mod, (path, tree) in self.mods.items():
+            env = self._env(mod, path, tree)
+            for top in tree.body:
+                own = {f"{mod}.{n}" for n in self._bound_names(top)}
+                for node in ast.walk(top):
+                    if isinstance(node, (ast.Name, ast.Attribute)) and isinstance(
+                        node.ctx, ast.Load
+                    ):
+                        t = self._target(env, node)
+                        if t in referenced and t not in own:
+                            referenced[t] = True
+                    if isinstance(node, ast.Call):
+                        t = self._target(env, node.func)
+                        if t in positional_params:
+                            self._mark(options, t, positional_params[t], node)
+        return options, referenced
+
+    @staticmethod
+    def _mark(options, q, positional, call: ast.Call) -> None:
+        for i, arg in enumerate(call.args):
+            if isinstance(arg, ast.Starred):
+                for p in positional[i:]:
+                    if f"{q}.{p}" in options:
+                        options[f"{q}.{p}"] = True
+                break
+            if i < len(positional) and f"{q}.{positional[i]}" in options:
+                options[f"{q}.{positional[i]}"] = True
+        for kw in call.keywords:
+            for key in options:
+                if key.startswith(q + ".") and (kw.arg is None or key == f"{q}.{kw.arg}"):
+                    options[key] = True
+
+
+def scan():
+    options, referenced = _Scan().run()
+    never_set = sorted(k for k, v in options.items() if not v)
+    uncalled = sorted(k for k, v in referenced.items() if not v)
+    return options, never_set, uncalled
+
+
+def test_every_option_is_set_by_some_caller():
+    _, never_set, _ = scan()
+    assert set(never_set) == KEPT_OPTIONS
+
+
+def test_every_public_name_has_a_caller():
+    _, _, uncalled = scan()
+    assert uncalled == []
+
+
+if __name__ == "__main__":
+    opts, never, unc = scan()
+    print(len(opts), "defaulted options,", len(never), "never set")
+    for k in never:
+        print("  option", k)
+    print(len(unc), "uncalled names")
+    for k in unc:
+        print("  name", k)

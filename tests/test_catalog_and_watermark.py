@@ -14,6 +14,7 @@ from aiven_challenge2_cdc_sharing_spark.sources.catalog import (
     save_governed_copy,
     table_exists,
 )
+from aiven_challenge2_cdc_sharing_spark.streaming import windowed_counts
 from aiven_challenge2_cdc_sharing_spark.tables import load_table
 
 
@@ -83,9 +84,7 @@ def test_watermark_drops_too_late_events(spark, tmpdir):
         .json(f"{tmpdir}/in")
     )
     q = (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour").alias("win"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
+        windowed_counts(stream)  # 1-hour windows, 10-minute watermark
         .writeStream.format("memory")
         .queryName("wm_counts")
         .outputMode("append")

@@ -22,6 +22,7 @@ from aiven_challenge2_cdc_sharing_spark.streaming import (
     read_snapshot,
     envelope_file_stream,
     peek_one,
+    progress_summary,
     run_snapshot_maintenance,
     windowed_counts,
 )
@@ -192,12 +193,14 @@ def test_stream_crash_mid_run_recovers_from_checkpoint(spark, sf_dir, tmpdir):
     assert rows_set(read_snapshot(spark, snap)) == expected
 
 
-def test_stream_windowed_counts_match_batch(spark, sf_dir, tmpdir):
+def _stream_vs_batch_windows(spark, sf_dir, tmpdir, slide=None):
+    """``windowed_counts`` over the events table as a batch and as a
+    file stream: (stream rows, batch rows, the finished query)."""
     events = load_table(spark, sf_dir, "events")
     events_dir = f"{tmpdir}/ev_json"
     events.write.mode("overwrite").json(events_dir)
 
-    batch_result = windowed_counts(events, window="1 hour")
+    batch_result = windowed_counts(events, window="1 hour", slide=slide)
 
     stream = (
         spark.readStream.schema(events.schema)
@@ -205,7 +208,7 @@ def test_stream_windowed_counts_match_batch(spark, sf_dir, tmpdir):
         .json(events_dir)
     )
     q = (
-        windowed_counts(stream, window="1 hour")
+        windowed_counts(stream, window="1 hour", slide=slide)
         .writeStream.format("memory")
         .queryName("win_counts")
         .outputMode("complete")
@@ -218,7 +221,29 @@ def test_stream_windowed_counts_match_batch(spark, sf_dir, tmpdir):
     want = batch_result.select(
         F.col("win.start").alias("s"), F.col("win.end").alias("e"), "cnt"
     )
-    assert rows_set(got) == rows_set(want)
+    return rows_set(got), rows_set(want), q
+
+
+def test_stream_windowed_counts_match_batch(spark, sf_dir, tmpdir):
+    got, want, q = _stream_vs_batch_windows(spark, sf_dir, tmpdir)
+    assert got == want
+
+    # T7: the liveness summary of the finished query names its last batch
+    summary = progress_summary(q)
+    last = q.lastProgress
+    assert summary["batchId"] == last["batchId"] == max(p["batchId"] for p in q.recentProgress)
+    assert summary["numInputRows"] == last["numInputRows"]
+    assert summary["inputRowsPerSecond"] == last["inputRowsPerSecond"]
+    assert summary["status"]["isTriggerActive"] is False
+
+
+def test_stream_sliding_windowed_counts_match_batch(spark, sf_dir, tmpdir):
+    """T6: 1-hour windows sliding every 30 minutes (each event counts in
+    two windows) agree between the stream and the batch twin."""
+    got, want, _ = _stream_vs_batch_windows(spark, sf_dir, tmpdir, slide="30 minutes")
+    assert got == want
+    timed = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull()).count()
+    assert sum(int(cnt) for cnt, _, _ in want) == 2 * timed  # rows_set sorts the columns
 
 
 def test_peek_one(spark, sf_dir, tmpdir):
@@ -344,6 +369,28 @@ def test_replayed_batch_leaves_state_identical(spark, tmpdir):
     merge_snapshot_batch(batch, snap, 16)
     assert rows_set(read_table(spark, snap)) == once
     assert len(once) == 101  # the tombstone of key 8 is kept
+
+
+def test_absent_partition_reads_as_jvm_side_empty_frame(spark, tmpdir):
+    """Partitions the manifest lacks read as an empty frame with the
+    recorded schema, built in the JVM: a Python-side empty relation
+    (``ExistingRDD``) would start Python workers for every action."""
+    from aiven_challenge2_cdc_sharing_spark.plans.inspect import explain_str
+    from aiven_challenge2_cdc_sharing_spark.streaming.runtime import (
+        merge_snapshot_batch,
+        read_table,
+    )
+
+    snap = f"{tmpdir}/state"
+    merge_snapshot_batch(_inserts(spark, [1]), snap, 16)  # fills one bucket
+    full = read_table(spark, snap)
+    live = full.first()["__bucket"]
+    empty = read_table(spark, snap, [f"__bucket={b}" for b in range(16) if b != live])
+    assert "ExistingRDD" not in explain_str(empty)
+    assert [(f.name, f.dataType) for f in empty.schema] == [
+        (f.name, f.dataType) for f in full.schema
+    ]
+    assert empty.count() == 0
 
 
 @pytest.mark.parametrize("uri", [False, True], ids=["plain", "file_uri"])
