@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..tables import load_table
+
 BASE_EPOCH = 1_704_067_200  # 2024-01-01 00:00:00 UTC
 BASE_MS = BASE_EPOCH * 1000
 
@@ -36,7 +38,7 @@ _PHONE_V2 = _PHONE_TMPL.format(id="id", mult=104729)
 def generate_customer_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Initial OLTP rows (reference schema setup_cdc.pgsql:2-9), derived
     deterministically from the driver ``customer`` table."""
-    cust = spark.read.parquet(f"{sf_dir.rstrip('/')}/customer.parquet")
+    cust = load_table(spark, sf_dir, "customer")
     return cust.select(
         F.col("c_custkey").cast("int").alias("id"),
         F.col("c_name").alias("full_name"),

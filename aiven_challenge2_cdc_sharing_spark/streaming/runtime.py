@@ -201,9 +201,17 @@ def merge_snapshot_batch(
 
     Columns an envelope adds mid-stream widen the state: keys last
     written before the column arrived read it as NULL.
+
+    Poison records are dropped before bucketing: an ``op`` outside
+    c/u/d/r, or a NULL key, which covers a missing image for the op
+    (``before`` for a delete, ``after`` otherwise).  Served, they would
+    be a live row for an unknown op and one all-NULL row for every
+    keyless record.  Committing them as a quarantine beside the state
+    is left to ROADMAP.md direction 1.
     """
     spark = batch_df.sparkSession
-    changes = unwrap(batch_df).withColumn(
+    changes = unwrap(batch_df.filter(F.col("op").isin("c", "u", "d", "r")))
+    changes = changes.filter(F.col("id").isNotNull()).withColumn(
         "__bucket",
         F.pmod(F.xxhash64(F.col("id")), F.lit(n_buckets)).cast("int"),
     )

@@ -1,17 +1,43 @@
 """Parquet loaders for the driver test tables.
 
-Reads are plain ``spark.read.parquet`` — self-describing, vectorized,
-column-pruned and filter-pushed by Catalyst.  At 100 TB these would be
-partitioned/bucketed Delta tables; the loader is the single seam where
-that swap happens.
+Reads are ``spark.read.parquet`` — vectorized, column-pruned and
+filter-pushed by Catalyst.  Inferring a file's schema runs one Spark job
+that reads its footer, so the schema inferred for a table file is cached
+per (session, path, file size, ``st_mtime_ns``) and later reads pass it
+with ``spark.read.schema``: they run no job.  A file rewritten in place
+changes its size or mtime and is inferred again; a path ``os.stat``
+cannot see (a remote or URI path) is inferred on every read, as a plain
+``spark.read.parquet``.  Only the schema is cached: each call returns a
+new relation, so a self-join of one table keeps distinct attribute ids.
+At 100 TB these would be partitioned/bucketed Delta tables; the loader
+is the single seam where that swap happens.
 """
 
 from __future__ import annotations
 
+import functools
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .schemas import TABLE_NAMES, TESTDATA_COLUMNS
+
+
+@functools.lru_cache(maxsize=32)
+def _inferred_schema(spark: SparkSession, path: str, size: int, mtime_ns: int) -> StructType:
+    return spark.read.parquet(path).schema
+
+
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    schema = _inferred_schema(spark, path, st.st_size, st.st_mtime_ns)
+    return spark.read.schema(schema).parquet(path)
+
 
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, spread: bool = False
@@ -34,14 +60,17 @@ def load_table(
         if df.rdd.getNumPartitions() < target:
             df = df.repartition(target)
         return df
+    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
     if name == "events":
         # Some generator versions store ts as TIMESTAMP(NANOS), which the
         # vectorized Spark reader rejects; with nanosAsLong those files read
         # the raw int64 nanos, truncated here to micros (same truncation
         # DuckDB applies). TIMESTAMP(MICROS) files read natively as a
         # timestamp column and need no conversion — check the read dtype.
+        # The cached schema is the one read under nanosAsLong, before the
+        # conversion.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
+        df = _read(spark, path)
         ts_type = dict(df.dtypes)["ts"]
         if ts_type == "bigint":
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
@@ -51,4 +80,4 @@ def load_table(
             # and to what timestamp_micros produced for the nanos files.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
+    return _read(spark, path)

@@ -9,6 +9,10 @@ package outside ``queries/``:
 - the public names (functions, classes, module constants) that nothing
   references besides their package's ``__init__`` re-export.
 
+It also finds each package read of a driver test table (a
+``read.parquet`` of a path built from ``sf_dir``) that bypasses
+``tables.load_table``, and so its schema cache.
+
 An option no caller sets is a setting whose other values nothing runs;
 a name nothing calls is code nothing checks. No Spark is needed.
 """
@@ -188,6 +192,23 @@ def scan():
     return options, never_set, uncalled
 
 
+def table_reads_outside_loader() -> list[str]:
+    """``path:line`` of each ``read.parquet`` call in the package, outside
+    ``tables.py``, whose path is built from ``sf_dir``: a test table read
+    that bypasses ``tables.load_table`` and its schema cache."""
+    found = []
+    for mod, (path, tree) in _Scan().mods.items():
+        if not mod.startswith(PKG) or mod == f"{PKG}.tables":
+            continue
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "parquet" and ".read" in ast.unparse(node.func.value)
+                    and any(isinstance(n, ast.Name) and n.id == "sf_dir"
+                            for a in node.args for n in ast.walk(a))):
+                found.append(f"{os.path.relpath(path, ROOT)}:{node.lineno}")
+    return found
+
+
 def test_every_option_is_set_by_some_caller():
     _, never_set, _ = scan()
     assert set(never_set) == KEPT_OPTIONS
@@ -196,6 +217,10 @@ def test_every_option_is_set_by_some_caller():
 def test_every_public_name_has_a_caller():
     _, _, uncalled = scan()
     assert uncalled == []
+
+
+def test_test_tables_are_read_through_the_loader():
+    assert table_reads_outside_loader() == []
 
 
 if __name__ == "__main__":

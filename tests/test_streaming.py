@@ -511,6 +511,30 @@ def test_commit_keeps_at_most_two_versions(spark, tmpdir):
     assert on_disk == listed
 
 
+def test_poison_records_are_not_served(spark, tmpdir):
+    """Of a good insert, an unknown op, a keyless insert and an update
+    without its after-image, only the good insert is served."""
+    from aiven_challenge2_cdc_sharing_spark.schemas import CDC_ENVELOPE
+    from aiven_challenge2_cdc_sharing_spark.streaming.runtime import merge_snapshot_batch
+
+    def img(key):
+        return {"id": key, "full_name": f"name {key}", "email": f"{key}@x", "phone": "555",
+                "classification": "public", "created_at": "2024-01-01T00:00:00Z"}
+
+    records = [("c", None, img(1)), ("x", None, img(2)), ("c", None, img(None)),
+               ("u", img(3), None)]
+    os.makedirs(f"{tmpdir}/batch")
+    with open(f"{tmpdir}/batch/0.json", "w") as f:
+        for seq, (op, before, after) in enumerate(records):
+            f.write(json.dumps({"op": op, "before": before, "after": after, "ts_ms": 1,
+                                "source_table": "customer", "seq": seq}) + "\n")
+    batch = spark.read.schema(CDC_ENVELOPE).json(f"{tmpdir}/batch")
+    snap = f"{tmpdir}/state"
+    merge_snapshot_batch(batch, snap, 16)
+    rows = read_snapshot(spark, snap).collect()
+    assert [(r["id"], r["full_name"]) for r in rows] == [(1, "name 1")]
+
+
 def test_merge_and_read_job_counts(spark, tmpdir):
     """The per-job floor dominates small batches, so the job count is the
     cost to guard: a merge into an existing state runs at most 4 jobs
