@@ -10,7 +10,7 @@ capabilities Spark-first:
 - ``tables``       parquet loaders over the driver test data
 - ``cdc``          CDC event generator, transform algebra (unwrap/rewrite/
                    key-extract/route), snapshot materializer (MERGE semantics)
-- ``operators``    joins (as-of, range), top-k, dedup, similarity search
+- ``operators``    joins (as-of, binned range), top-k, dedup, similarity search
 - ``functions``    text analysis, quality scoring, fingerprinting
 - ``streaming``    Structured Streaming runtime for the same algebra
 - ``queries``      the oracle-checked query registry (driver contract)

@@ -23,13 +23,6 @@ from ..schemas import CDC_WIRE_KEY, CDC_WIRE_VALUE
 META_COLS = ("__deleted", "ts_ms", "seq")
 
 
-def filter_source_table(envelopes: DataFrame) -> DataFrame:
-    """P5 — source-side include-list (terraform/main.tf:250; publication
-    FOR TABLE, setup_cdc.pgsql:35): the ``customer`` table.  A plain
-    filter: Catalyst pushes it into the scan."""
-    return envelopes.filter(F.col("source_table") == "customer")
-
-
 def _image(deleted: Column) -> Column:
     """after-image for upserts, before-image for deletes — the rewrite
     semantics of ExtractNewRecordState + delete.handling.mode=rewrite
@@ -159,37 +152,3 @@ def from_wire_quarantine(wire: DataFrame) -> tuple[DataFrame, DataFrame]:
     )
     quarantined = parsed.filter(bad).select("key_json", "value_json", "offset")
     return _wire_rows(parsed.filter(~bad)), quarantined
-
-
-def check_constraints(rows: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """P7 — the CHECK/NOT NULL constraints of setup_cdc.pgsql:3-8 as a
-    (valid, quarantined) split."""
-    valid_pred = (
-        F.col("classification").isin("public", "private")
-        & F.col("full_name").isNotNull()
-        & F.col("email").isNotNull()
-    )
-    return rows.filter(valid_pred), rows.filter(~valid_pred)
-
-
-def union_evolving_logs(*logs: DataFrame) -> DataFrame:
-    """Schema-evolution union for envelope logs: later capture epochs
-    may carry MORE columns in their before/after images (the ALTER
-    TABLE ADD COLUMN case Debezium streams through transparently —
-    its value schema just grows).  ``unionByName(allowMissingColumns)``
-    recurses into the nested structs, NULL-filling the missing fields
-    of earlier epochs, so one ``unwrap`` downstream flattens every
-    epoch into the WIDEST row shape and last-writer-wins snapshots
-    carry the evolved schema with NULLs where history predates the
-    column — exactly Postgres' own semantics for rows that were never
-    updated after the ALTER.
-
-    Cites reference behavior: the connector config
-    (terraform/main.tf:250-258) pins no value schema — OpenSearch's
-    dynamic mapping absorbed new fields silently; here the evolution
-    is explicit, typed, and testable.
-    """
-    out = logs[0]
-    for nxt in logs[1:]:
-        out = out.unionByName(nxt, allowMissingColumns=True)
-    return out

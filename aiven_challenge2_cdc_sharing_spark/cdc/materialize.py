@@ -100,9 +100,3 @@ def merge_state(state: DataFrame, batch: DataFrame) -> DataFrame:
     the columns of both sides: a column the batch adds is NULL for the
     state's rows, one it lacks is NULL for its own."""
     return latest_state(state.unionByName(batch, allowMissingColumns=True))
-
-
-def snapshot_at(changes: DataFrame, ts_ms: int) -> DataFrame:
-    """J5 — point-in-time reconstruction: state as of event-time T.
-    The filter is pushed below the window shuffle by Catalyst."""
-    return latest_snapshot(changes.filter(F.col("ts_ms") <= ts_ms))

@@ -1,4 +1,4 @@
-from .joins import asof_join, range_join
+from .joins import asof_join
 from .topk import top_k_per_group
 
-__all__ = ["asof_join", "range_join", "top_k_per_group"]
+__all__ = ["asof_join", "top_k_per_group"]

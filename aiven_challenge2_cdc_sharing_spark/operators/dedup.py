@@ -201,8 +201,8 @@ def jaccard_pairs(
     JVM-side, and |A∩B| = its size because per-doc shingles are
     distinct.  J = ov / (|A|+|B|-ov).
 
-    Why pair grain and not the posting-count form
-    (``jaccard_pairs_postings``): the posting form joins an exploded
+    Why pair grain and not the posting-count form (its reference
+    implementation lives in the tests): the posting form joins an exploded
     (id, size, shingle) token list to BOTH pair sides — its
     intermediate is one row per pair per matching token, then a
     pair-key groupBy over all of it.  At the round-11 stress point
@@ -252,54 +252,6 @@ def jaccard_pairs(
         F.col("__sz_a") + F.col("__sz_b") - F.col("__ov")
     )
     return scored.select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
-
-
-def jaccard_pairs_postings(
-    pairs: DataFrame,
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-) -> DataFrame:
-    """Posting-count twin of ``jaccard_pairs`` (the pre-round-12
-    default, kept for the measured comparison and the parity pin).
-
-    Explodes the corpus's shingle sets ONCE into a checkpointed
-    (id, set-size, shingle) posting list, joins it to the pair list on
-    each side, and counts matching shingles per pair — the count IS
-    |A∩B| because per-doc shingles are distinct.  Nothing after the
-    scan ships a shingle ARRAY, but the intermediate is one row per
-    pair per MATCHING TOKEN (~300M rows at the 500k-doc stress point)
-    plus a pair-key groupBy over all of it — the measured spill
-    driver that motivated the pair-grain rewrite (SCALING.md rounds
-    11-12).  Still the better shape when candidate pairs are fat-doc
-    dominated (huge |A| with tiny overlap), where the pair grain would
-    ship large arrays to compute a small count."""
-    sh = with_shingles(df, text_col)
-    ex = sh.select(
-        F.col(id_col).alias("__jid"),
-        F.size("__sh").alias("__sz"),
-        F.explode("__sh").alias("__tok"),
-    ).localCheckpoint()
-    a = ex.select(
-        F.col("__jid").alias("id_a"),
-        F.col("__sz").alias("__sz_a"),
-        "__tok",
-    )
-    b = ex.select(
-        F.col("__jid").alias("id_b"),
-        F.col("__sz").alias("__sz_b"),
-        "__tok",
-    )
-    ov = (
-        pairs.join(a, "id_a")
-        .join(b, ["id_b", "__tok"])
-        .groupBy("id_a", "id_b", "__sz_a", "__sz_b")
-        .agg(F.count(F.lit(1)).alias("__ov"))
-    )
-    jac = F.col("__ov").cast("double") / (
-        F.col("__sz_a") + F.col("__sz_b") - F.col("__ov")
-    )
-    return ov.select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
 
 
 def _simhash_from_hashes(bits: int) -> tuple[Column, Column]:

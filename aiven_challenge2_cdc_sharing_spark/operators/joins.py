@@ -9,7 +9,7 @@ as-of strategy (cf. pandas merge_asof semantics, Flink temporal join).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -56,19 +56,6 @@ def asof_join(
     return matched.filter(F.col("__asof_ts").isNotNull()) if inner else matched
 
 
-def range_join(
-    fact: DataFrame,
-    bands: DataFrame,
-    value: Column,
-    lo: Column,
-    hi: Column,
-) -> DataFrame:
-    """J4 theta join of a fact table against a small band/interval table.
-    The band side is always broadcast — a range condition against a
-    broadcast table is a map-side operation, no fact shuffle."""
-    return fact.join(F.broadcast(bands), (value >= lo) & (value < hi))
-
-
 def binned_range_join(
     fact: DataFrame,
     bands: DataFrame,
@@ -88,7 +75,7 @@ def binned_range_join(
     re-filters the candidates.  Cost drops to rows × (bands overlapping
     each row's bin) — with non-overlapping bands that's rows × ~1
     regardless of band count, so at 10k bands this wins by 4 orders of
-    magnitude; the result is identical to ``range_join``.
+    magnitude; the result is identical to the broadcast range join.
 
     Fact rows join at most the bands whose intervals cover their bin,
     and a fact row is never duplicated across bins (it has one bin), so

@@ -1,26 +1,20 @@
-"""Z-order (Morton-curve) data layout for multi-column data skipping.
+"""Z-order (Morton-curve) values for multi-column data skipping.
 
 Parquet readers prune files/row-groups by min-max statistics.  A table
 sorted linearly by one column gives perfect pruning on that column and
-none on any other; interleaving the bits of two (or more) key columns
-and range-partitioning by the interleaved value keeps every file's
-bounding box small in BOTH dimensions, so predicates on either column
-prune well — the layout trick Delta/Iceberg expose as OPTIMIZE ZORDER
-BY, built here from stock primitives (bit ops + repartitionByRange +
-sortWithinPartitions).
+none on any other; interleaving the bits of two key columns and
+ordering by the interleaved value keeps every file's bounding box small
+in BOTH dimensions — the layout trick Delta/Iceberg expose as OPTIMIZE
+ZORDER BY.  The registry's layout queries compute this value.
 
 The z-value is a pure literal-shift expression (one codegen'd column,
-no UDF), so it is also exactly recomputable by the DuckDB oracle.
-
-At 100 TB: z-ordering is a full rewrite — run it at ingest or as a
-periodic compaction, amortized over every selective query that follows;
-``bits`` caps the curve resolution (16 bits/dim => 4G cells, plenty
-before file counts dominate).
+no UDF), so it is also exactly recomputable by the DuckDB oracle;
+``bits`` caps the curve resolution (16 bits/dim => 4G cells).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -39,58 +33,3 @@ def interleave_bits(a: Column, b: Column, bits: int = 16) -> Column:
             F.shiftleft(F.shiftright(b, i).bitwiseAND(F.lit(1)), 2 * i + 1)
         )
     return z
-
-
-def zorder_by(
-    df: DataFrame,
-    col_a: str,
-    col_b: str,
-    n_partitions: int = 32,
-) -> DataFrame:
-    """Lay ``df`` out along the Morton curve of (col_a, col_b), in a
-    ``__z`` column:
-    range-partition by the z-value (each output file covers a compact
-    curve segment = a small bounding box in both key dimensions), then
-    sort within partitions so row-group stats are tight too.
-
-    Both columns are min-max normalized to the full 16-bit range
-    first — REQUIRED, not cosmetic: with raw values, the column with
-    the wider range owns all the high interleaved bits and the curve
-    degenerates into a plain sort on that column (measured: the
-    per-file bounding boxes match a date sort exactly).  Normalization
-    is one tiny agg; Delta's OPTIMIZE ZORDER does the equivalent with
-    range-id binning."""
-    bounds = df.agg(
-        F.min(col_a), F.max(col_a), F.min(col_b), F.max(col_b)
-    ).collect()[0]
-    top = (1 << 16) - 1
-
-    def scaled(c: str, lo, hi) -> Column:
-        if hi is None or lo is None or hi <= lo:
-            return F.lit(0).cast("long")
-        return F.floor(
-            (F.col(c).cast("double") - F.lit(float(lo)))
-            * top
-            / F.lit(float(hi - lo))
-        ).cast("long")
-
-    zdf = df.withColumn(
-        "__z",
-        interleave_bits(
-            scaled(col_a, bounds[0], bounds[1]),
-            scaled(col_b, bounds[2], bounds[3]),
-        ),
-    )
-    return zdf.repartitionByRange(n_partitions, "__z").sortWithinPartitions("__z")
-
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-) -> None:
-    """Write ``df`` to parquet in 8 files laid out along the (col_a,
-    col_b) Morton curve; the z-column is internal and dropped from the
-    output."""
-    zorder_by(df, col_a, col_b, 8).drop("__z").write.parquet(path)

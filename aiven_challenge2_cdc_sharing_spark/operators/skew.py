@@ -13,37 +13,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def salted_join(
-    skewed: DataFrame,
-    dim: DataFrame,
-    key: str,
-    salt_buckets: int = 8,
-) -> DataFrame:
-    """Inner equi-join a skewed fact against a smaller table with key salting:
-    fact rows get an arbitrary-but-join-safe salt in [0, buckets) (the
-    id-derived value can differ across task retries, which is harmless
-    because every salt matches exactly one dim replica); the dim side
-    is replicated once per salt value, so each hot key spreads over
-    ``salt_buckets`` reducers instead of one.
-
-    The join is inner: under right/full outer, every unmatched dim row
-    would surface once per replica —
-    ``salt_buckets`` duplicate output rows."""
-    salted_fact = skewed.withColumn(
-        "__salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets))
-    )
-    replicas = dim.withColumn(
-        "__salt",
-        F.explode(
-            F.sequence(
-                F.lit(0).cast("long"), F.lit(salt_buckets - 1).cast("long")
-            )
-        ),
-    )
-    out = salted_fact.join(replicas, on=[key, "__salt"])
-    return out.drop("__salt")
-
-
 def salted_count(df: DataFrame, key: str) -> DataFrame:
     """Two-phase aggregation for one dominant group: count per
     (key, salt) over 16 salts first (spreads the hot group), then sum

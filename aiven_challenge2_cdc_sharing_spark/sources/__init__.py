@@ -1,9 +1,6 @@
 from .multimodal import attach_fake_media, decode_media_features
-from .pysource import CdcEnvelopeDataSource, register_cdc_envelope_source
 
 __all__ = [
-    "CdcEnvelopeDataSource",
     "attach_fake_media",
     "decode_media_features",
-    "register_cdc_envelope_source",
 ]

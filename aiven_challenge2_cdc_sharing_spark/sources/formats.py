@@ -9,7 +9,7 @@ schema (never inferSchema on the hot path: inference is an extra full
 scan and can mistype columns on dirty data), and for CSV/JSON with
 PERMISSIVE corrupt-record capture so malformed rows land in a
 quarantine column instead of killing a 100-TB job (the same
-valid/quarantine split as cdc.algebra.check_constraints).
+valid/quarantine split as cdc.algebra.from_wire_quarantine).
 
 Scale notes:
 - Uncompressed/gzip JSON+CSV are line-splittable only when
@@ -119,13 +119,3 @@ def valid_rows(df: DataFrame) -> DataFrame:
     if CORRUPT_COL not in df.columns:
         return df
     return df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-
-
-def quarantined_rows(df: DataFrame) -> DataFrame:
-    """Malformed rows with their raw record, for a dead-letter sink.
-
-    Keeps every column (not just ``_corrupt_record``): Spark refuses
-    plans whose required schema is only the internal corrupt column,
-    and a dead-letter row is more useful with whatever fields DID
-    parse."""
-    return df.filter(F.col(CORRUPT_COL).isNotNull())

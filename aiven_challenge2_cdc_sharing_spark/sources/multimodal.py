@@ -8,8 +8,8 @@ Two decode tiers:
   this container, including a DuckDB-oracle-checked registry query
   over PNGs generated deterministically from document text.
 - the clearly-marked deterministic FAKE for the generic
-  ``image/fake`` payloads (richer formats — JPEG/video — would use
-  PIL/ffmpeg via the import-try; absent here by design).
+  ``image/fake`` payloads (richer formats — JPEG/video — would need
+  PIL/ffmpeg, which this package does not use).
 
 Everything Spark-side is real and tested either way: the binary
 schema, the mapInPandas batch shape, partition-parallel execution,
@@ -43,15 +43,6 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("byte_sum_mod", T.LongType()),
     ]
 )
-
-
-def _try_real_decoder():
-    try:  # richer formats (JPEG/...) — absent in this container by design
-        import PIL.Image  # noqa: F401
-
-        return PIL.Image
-    except ImportError:
-        return None
 
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
@@ -236,8 +227,7 @@ def decode_media_features(media: DataFrame) -> DataFrame:
     """mapInPandas feature-extract over generic binary payloads using
     the deterministic fake decoder (width/height derived from byte
     length, checksum from byte values).  For real formats use
-    ``decode_real_media``; richer formats (JPEG/...) would dispatch to
-    PIL via ``_try_real_decoder`` when importable.
+    ``decode_real_media``; richer formats (JPEG/...) are not decoded.
     """
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

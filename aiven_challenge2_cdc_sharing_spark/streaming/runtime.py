@@ -6,10 +6,9 @@ The reference's consumer loop (consumer_to_opensearch.py:52-96) maps to:
   checkpointed offsets (stronger than broker-side auto-commit: offsets
   and state commit atomically per micro-batch);
 - T2 at-least-once + idempotent apply -> foreachBatch + deterministic
-  last-writer-wins merge == effectively exactly-once materialization;
-- T3/T6 tumbling/sliding/session windows; T4 watermarking (the
-  reference has no lateness concept — it relies on single-partition
-  total order, terraform/main.tf:79,234 — we keep only per-key order);
+  last-writer-wins merge == effectively exactly-once materialization
+  (the reference relies on single-partition total order,
+  terraform/main.tf:79,234 — we keep only per-key order);
 - S6 peek -> availableNow + limit;
 - T7 heartbeat/liveness -> StreamingQuery.lastProgress.
 
@@ -53,6 +52,8 @@ def envelope_file_stream(spark: SparkSession, events_dir: str) -> DataFrame:
 
 
 N_SNAPSHOT_BUCKETS = 16
+# the key-bucket partition column of the state table
+_BUCKET_COL = "__bucket"
 
 
 def local_path(path: str) -> str:
@@ -117,18 +118,19 @@ def _newest_manifest(path: str) -> dict | None:
     return None
 
 
-def commit_table(df: DataFrame, path: str, partition_by: str | None = None) -> None:
+def commit_table(df: DataFrame, path: str) -> None:
     """Write ``df`` as the next version n of the table at ``path``.
 
-    One Spark write to ``path/_staging``; each staged file is renamed
-    into its partition directory under a ``_tag(n)`` prefix, and the
-    partitions ``df`` lacks carry over from n-1.  The commit is one
-    ``replace_file`` of ``_manifest/<n>.json`` (schema, live files per
-    partition): a reader or a crashed process sees n-1 or n, never a
-    mix.  After it, the files older manifests list and n-1 does not are
-    deleted, so a reader that resolved n-1 can finish its scan.  Read it
-    with ``read_table``.  Local filesystems only (plain paths or ``file:``
-    URIs): an ``hdfs:`` or ``s3a:`` table needs the Hadoop FileSystem API.
+    One Spark write to ``path/_staging``, partitioned by
+    ``_BUCKET_COL``; each staged file is renamed into its partition
+    directory under a ``_tag(n)`` prefix, and the partitions ``df``
+    lacks carry over from n-1.  The commit is one ``replace_file`` of
+    ``_manifest/<n>.json`` (schema, live files per partition): a reader
+    or a crashed process sees n-1 or n, never a mix.  After it, the
+    files older manifests list and n-1 does not are deleted, so a reader
+    that resolved n-1 can finish its scan.  Read it with ``read_table``.
+    Local filesystems only (plain paths or ``file:`` URIs): an ``hdfs:``
+    or ``s3a:`` table needs the Hadoop FileSystem API.
     """
     root = local_path(path)
     prev = _newest_manifest(path)
@@ -136,11 +138,10 @@ def commit_table(df: DataFrame, path: str, partition_by: str | None = None) -> N
     for d, f in list(_data_files(root)):
         if f.lstrip(".").startswith(_tag(n)):  # left by a crashed attempt at n
             os.remove(os.path.join(d, f))
-    writer = df.write.mode("overwrite")
-    (writer.partitionBy(partition_by) if partition_by else writer).parquet(f"{path}/_staging")
+    df.write.mode("overwrite").partitionBy(_BUCKET_COL).parquet(f"{path}/_staging")
     staging = os.path.join(root, "_staging")
-    files = dict(prev["files"]) if prev and partition_by else {}
-    parts = [p for p in os.listdir(staging) if "=" in p] if partition_by else [""]
+    files = dict(prev["files"]) if prev else {}
+    parts = [p for p in os.listdir(staging) if "=" in p]
     for i, part in enumerate(parts):
         # ``i``: a task's file name repeats in each partition it writes
         prefix, src, dst = f"{_tag(n)}{i}-", os.path.join(staging, part), os.path.join(root, part)
@@ -167,7 +168,7 @@ def _relation(spark: SparkSession, path: str, schema: str, parts: tuple, names: 
         spark.read.schema(StructType.fromJson(json.loads(schema)))
         .option("basePath", path)
         .option("pathGlobFilter", "{" + ",".join(names) + "}")
-        .parquet(*[f"{path}/{p}" if p else path for p in parts])
+        .parquet(*[f"{path}/{p}" for p in parts])
     )
 
 
@@ -196,8 +197,8 @@ def merge_snapshot_batch(
     batch_df: DataFrame, snapshot_path: str, n_buckets: int
 ) -> None:
     """One micro-batch's idempotent state merge (the body of
-    ``run_snapshot_maintenance``, reusable from multi-sink pipelines):
-    unwrap, bucket by key hash, rewrite only touched buckets.
+    ``run_snapshot_maintenance``): unwrap, bucket by key hash, rewrite
+    only touched buckets.
 
     Columns an envelope adds mid-stream widen the state: keys last
     written before the column arrived read it as NULL.
@@ -212,23 +213,21 @@ def merge_snapshot_batch(
     spark = batch_df.sparkSession
     changes = unwrap(batch_df.filter(F.col("op").isin("c", "u", "d", "r")))
     changes = changes.filter(F.col("id").isNotNull()).withColumn(
-        "__bucket",
+        _BUCKET_COL,
         F.pmod(F.xxhash64(F.col("id")), F.lit(n_buckets)).cast("int"),
     )
     # pin: consumed twice (touched-bucket probe + merge); lazy, so the
     # probe's own job materializes it instead of an extra count job
     changes = changes.localCheckpoint(eager=False)
-    touched = [
-        r["__bucket"] for r in changes.select("__bucket").distinct().collect()
-    ]
+    touched = [r[_BUCKET_COL] for r in changes.select(_BUCKET_COL).distinct().collect()]
     if not touched:
         return
     try:
-        prior = read_table(spark, snapshot_path, [f"__bucket={b}" for b in touched])
+        prior = read_table(spark, snapshot_path, [f"{_BUCKET_COL}={b}" for b in touched])
         state = merge_state(prior, changes)
     except FileNotFoundError:  # the first batch
         state = latest_state(changes)
-    commit_table(state, snapshot_path, "__bucket")
+    commit_table(state, snapshot_path)
 
 
 def run_snapshot_maintenance(
@@ -277,19 +276,7 @@ def run_snapshot_maintenance(
 
 def read_snapshot(spark: SparkSession, snapshot_path: str) -> DataFrame:
     """User-facing current state: the live rows of the newest version."""
-    return published_snapshot(read_table(spark, snapshot_path)).drop("__bucket")
-
-
-def windowed_counts(
-    events: DataFrame, window: str = "1 hour", slide: str | None = None
-) -> DataFrame:
-    """T3/T4/T6 — tumbling (or sliding) window counts over ``ts`` with a
-    10-minute watermark; works identically on batch and streaming
-    DataFrames (on batch the watermark is a no-op, which is what makes
-    the oracle check of the batch twin meaningful)."""
-    win = F.window("ts", window, slide) if slide else F.window("ts", window)
-    df = events.withWatermark("ts", "10 minutes") if events.isStreaming else events
-    return df.groupBy(win.alias("win")).agg(F.count(F.lit(1)).alias("cnt"))
+    return published_snapshot(read_table(spark, snapshot_path)).drop(_BUCKET_COL)
 
 
 def peek_one(

@@ -13,6 +13,13 @@ It also finds each package read of a driver test table (a
 ``read.parquet`` of a path built from ``sf_dir``) that bypasses
 ``tables.load_table``, and so its schema cache.
 
+Last, it walks reach from the product roots: the query registry
+(``queries/``), ``__spark_entry__.py``, ``bench.py``, ``perfbench/``,
+``tools/`` and ``REACH_ALLOWLIST``. Every top-level definition of the
+package outside ``queries/``, public or private, must be referenced
+from a root or from a definition a root reaches. ``tests/`` is no root:
+code only a test calls is not part of the product.
+
 An option no caller sets is a setting whose other values nothing runs;
 a name nothing calls is code nothing checks. No Spark is needed.
 """
@@ -30,6 +37,24 @@ KEPT_OPTIONS = {
     f"{PKG}.sources.kafka_shape.kafka_stream_reader.topic",
     f"{PKG}.sources.kafka_shape.kafka_stream_reader.starting_offsets",
 }
+
+
+# Entry points a deployment or an operator calls; tests stand in for them.
+REACH_ALLOWLIST = {
+    f"{PKG}.sources.kafka_shape.kafka_stream_reader":
+        "the production source; the tests and benchmarks run the file source",
+    f"{PKG}.streaming.runtime.peek_one":
+        "the operator's read-one-message check (the reference's peek.py)",
+    f"{PKG}.streaming.runtime.progress_summary":
+        "the heartbeat an operator polls on a running stream",
+    f"{PKG}.cdc.algebra.from_wire_quarantine":
+        "the wire decode whose quarantine a deployment commits beside the state",
+}
+
+
+def _is_root(mod: str) -> bool:
+    return (mod.startswith(f"{PKG}.queries") or mod in ("__spark_entry__", "bench")
+            or mod.split(".")[0] in ("perfbench", "tools"))
 
 
 def _modules() -> dict[str, tuple[str, ast.Module]]:
@@ -132,14 +157,37 @@ class _Scan:
             return None
         return self.resolve(q) if q else None
 
-    def run(self):
-        """(defaulted options -> set?, public name -> referenced?)."""
+    def _scope(self, private: bool) -> dict[str, ast.AST]:
+        """The top-level definitions of the package outside ``queries/``."""
         scope = {}
         for q, node in self.defs.items():
             owner, name = q.rsplit(".", 1)
             if (owner.startswith(PKG) and not owner.startswith(f"{PKG}.queries")
-                    and not name.startswith("_") and not _is_package(self.mods[owner][0])):
+                    and (private or not name.startswith("_"))
+                    and not _is_package(self.mods[owner][0])):
                 scope[q] = node
+        return scope
+
+    def unreached(self) -> list[str]:
+        """Definitions in ``_scope`` that no product root reaches,
+        directly or through the definitions it references."""
+        envs = {mod: self._env(mod, path, tree) for mod, (path, tree) in self.mods.items()}
+        work = [(mod, tree) for mod, (_, tree) in self.mods.items() if _is_root(mod)]
+        work += [(q.rsplit(".", 1)[0], self.defs[q]) for q in REACH_ALLOWLIST]
+        reached = set(REACH_ALLOWLIST)
+        while work:
+            mod, top = work.pop()
+            for node in ast.walk(top):
+                if isinstance(node, (ast.Name, ast.Attribute)) and isinstance(node.ctx, ast.Load):
+                    t = self._target(envs[mod], node)
+                    if t in self.defs and t not in reached:
+                        reached.add(t)
+                        work.append((t.rsplit(".", 1)[0], self.defs[t]))
+        return sorted(q for q in self._scope(private=True) if q not in reached)
+
+    def run(self):
+        """(defaulted options -> set?, public name -> referenced?)."""
+        scope = self._scope(private=False)
         options: dict[str, bool] = {}
         positional_params: dict[str, list[str]] = {}
         for q, node in scope.items():
@@ -223,6 +271,11 @@ def test_test_tables_are_read_through_the_loader():
     assert table_reads_outside_loader() == []
 
 
+def test_every_definition_is_reached_from_a_product_root():
+    unreached = _Scan().unreached()
+    assert not unreached, "no product root reaches:\n" + "\n".join(unreached)
+
+
 if __name__ == "__main__":
     opts, never, unc = scan()
     print(len(opts), "defaulted options,", len(never), "never set")
@@ -231,3 +284,7 @@ if __name__ == "__main__":
     print(len(unc), "uncalled names")
     for k in unc:
         print("  name", k)
+    unreached = _Scan().unreached()
+    print(len(unreached), "definitions no product root reaches")
+    for k in unreached:
+        print("  unreached", k)

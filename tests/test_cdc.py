@@ -1,7 +1,7 @@
 """CDC algebra + materializer tests — formalizing the reference's
 observational verification (SURVEY.md §5): golden snapshot, replay
 idempotence (consumer_to_opensearch.py:61,95 semantics), out-of-order
-robustness, constraint quarantine."""
+robustness."""
 
 from __future__ import annotations
 
@@ -9,15 +9,13 @@ from pyspark.sql import functions as F
 
 from aiven_challenge2_cdc_sharing_spark.cdc import (
     apply_changes,
-    check_constraints,
-    filter_source_table,
     from_wire,
     generate_envelope_log,
     latest_snapshot,
-    snapshot_at,
     to_wire,
     unwrap,
 )
+from tests.references import snapshot_at
 
 
 def rows_set(df, cols=None):
@@ -103,21 +101,6 @@ def test_tombstones_present_on_wire(spark, sf_dir):
         generate_envelope_log(spark, sf_dir).filter(F.col("op") == "d").count()
     )
     assert wire.filter(F.col("value_json").isNull()).count() == n_deletes
-
-
-def test_source_table_filter(spark, sf_dir):
-    log = generate_envelope_log(spark, sf_dir)
-    noise = log.withColumn("source_table", F.lit("other"))
-    mixed = log.unionByName(noise)
-    assert filter_source_table(mixed).count() == log.count()
-
-
-def test_check_constraints_quarantine(spark, sf_dir):
-    snap = latest_snapshot(unwrap(generate_envelope_log(spark, sf_dir)))
-    bad = snap.limit(3).withColumn("classification", F.lit("internal"))
-    valid, quarantined = check_constraints(snap.unionByName(bad))
-    assert quarantined.count() == 3
-    assert valid.count() == snap.count()
 
 
 def test_schema_evolution_mid_stream(spark, tmp_path):

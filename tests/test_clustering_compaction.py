@@ -1,27 +1,13 @@
-"""Connected-components dedup clustering + parquet compaction."""
+"""Connected-components dedup clustering."""
 
 from __future__ import annotations
 
-import glob
-import shutil
-import tempfile
-
-import pytest
 from pyspark.sql import functions as F
 
 from aiven_challenge2_cdc_sharing_spark.operators.clustering import (
     connected_components,
     dedup_clusters,
 )
-from aiven_challenge2_cdc_sharing_spark.sources.catalog import compact_parquet
-from aiven_challenge2_cdc_sharing_spark.tables import load_table
-
-
-@pytest.fixture()
-def tmpdir():
-    d = tempfile.mkdtemp(prefix="cc_test_")
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
 
 
 def test_connected_components_chain_and_islands(spark):
@@ -44,17 +30,3 @@ def test_dedup_clusters_survivors(spark):
     assert out[2] == (2, True) and out[3] == (2, False) and out[4] == (2, False)
     for singleton in (1, 5, 6, 7):
         assert out[singleton] == (singleton, True)
-
-
-def test_compact_parquet_reduces_files(spark, sf_dir, tmpdir):
-    li = load_table(spark, sf_dir, "lineitem")
-    loc = f"{tmpdir}/li"
-    li.repartition(40).write.parquet(loc)  # simulate small-files buildup
-    n_before = len(glob.glob(f"{loc}/part-*.parquet"))
-    rows_before = spark.read.parquet(loc).count()
-    n_target = compact_parquet(spark, loc, target_file_bytes=10 * 1024 * 1024,
-                               sort_by=("l_orderkey",))
-    n_after = len(glob.glob(f"{loc}/part-*.parquet"))
-    assert n_before == 40
-    assert n_after == n_target < n_before
-    assert spark.read.parquet(loc).count() == rows_before

@@ -77,7 +77,7 @@ def test_csv_quarantine_captures_malformed_rows(spark, tmp_path):
     )
     read = formats.read_csv(spark, str(path), TRICKY_SCHEMA)
     valid = formats.valid_rows(read)
-    bad = formats.quarantined_rows(read)
+    bad = read.filter(F.col(formats.CORRUPT_COL).isNotNull())
     assert sorted(r["id"] for r in valid.collect()) == [1, 2]
     bad_rows = bad.collect()
     assert len(bad_rows) == 1
@@ -94,7 +94,7 @@ def test_jsonl_quarantine_and_missing_fields(spark, tmp_path):
     )
     read = formats.read_jsonl(spark, str(path), TRICKY_SCHEMA)
     valid = formats.valid_rows(read)
-    bad = formats.quarantined_rows(read)
+    bad = read.filter(F.col(formats.CORRUPT_COL).isNotNull())
     rows = {r["id"]: r["text"] for r in valid.collect()}
     assert rows == {1: "full row", 2: None}
     assert len(bad.collect()) == 1

@@ -1,4 +1,4 @@
-"""Operator-level tests: skew salting equivalence, pandas-UDF centroids
+"""Operator-level tests: salted count equivalence, pandas-UDF centroids
 vs numpy, multimodal decode determinism, LSH recall floor, as-of join
 reference semantics."""
 
@@ -16,7 +16,7 @@ from aiven_challenge2_cdc_sharing_spark.operators.dedup import (
     minhash_signature,
 )
 from aiven_challenge2_cdc_sharing_spark.operators.joins import asof_join
-from aiven_challenge2_cdc_sharing_spark.operators.skew import salted_count, salted_join
+from aiven_challenge2_cdc_sharing_spark.operators.skew import salted_count
 from aiven_challenge2_cdc_sharing_spark.sources.multimodal import (
     attach_fake_media,
     attach_png_media,
@@ -28,18 +28,6 @@ from aiven_challenge2_cdc_sharing_spark.sources.multimodal import (
     encode_wav_pcm16,
 )
 from aiven_challenge2_cdc_sharing_spark.tables import load_table
-
-
-def test_salted_join_equals_plain_join(spark, sf_dir):
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer").withColumnRenamed(
-        "c_custkey", "o_custkey"
-    )
-    plain = orders.join(cust, "o_custkey").select("o_orderkey", "c_name")
-    salted = salted_join(orders, cust, "o_custkey", salt_buckets=8).select(
-        "o_orderkey", "c_name"
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
 
 
 def test_salted_count_equals_groupby(spark, sf_dir):
@@ -260,55 +248,6 @@ def test_lsh_bands_must_divide_num_hashes(spark):
         lsh_candidate_pairs(signed, "doc_id", bands=4, num_hashes=10)
 
 
-def test_zorder_layout_tightens_both_dimensions(spark, sf_dir, tmp_path):
-    """Z-order layout must give small per-file bounding boxes in BOTH
-    key dimensions, where a linear sort only bounds its own column.
-    Compare the mean normalized (custkey-span x dateday-span) area per
-    file: z-order should beat date-sort by a wide margin."""
-    import glob
-
-    from aiven_challenge2_cdc_sharing_spark.operators.layout import zorder_by
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate"
-    ).withColumn(
-        "day", F.datediff("o_orderdate", F.lit("1992-01-01").cast("date"))
-    )
-
-    z_dir, s_dir = f"{tmp_path}/z", f"{tmp_path}/s"
-    zorder_by(orders, "o_custkey", "day", n_partitions=16).write.parquet(z_dir)
-    orders.repartitionByRange(16, "o_orderdate").sortWithinPartitions(
-        "o_orderdate"
-    ).write.parquet(s_dir)
-
-    bounds = orders.agg(
-        F.max("o_custkey").alias("ck"), F.max("day").alias("dk")
-    ).collect()[0]
-
-    # the data-skipping metric: a single-column point predicate scans
-    # every file whose min-max spans it, so expected scan fraction ~
-    # mean per-file span in that dimension; sum over both dimensions
-    # scores the layout's balance (area product is ~1/n_files for ANY
-    # layout and cannot distinguish them)
-    def mean_spans(d):
-        ck_spans, day_spans = [], []
-        for f in glob.glob(f"{d}/*.parquet"):
-            r = spark.read.parquet(f).agg(
-                F.min("o_custkey"), F.max("o_custkey"),
-                F.min("day"), F.max("day"),
-            ).collect()[0]
-            ck_spans.append((r[1] - r[0]) / bounds["ck"])
-            day_spans.append((r[3] - r[2]) / bounds["dk"])
-        n = len(ck_spans)
-        return sum(ck_spans) / n, sum(day_spans) / n
-
-    z_ck, z_day = mean_spans(z_dir)
-    s_ck, s_day = mean_spans(s_dir)
-    # date sort: perfect on date (~1/16) but ~full custkey span per
-    # file (sum ~1.0); z-order: ~1/4 each (sum ~0.5)
-    assert z_ck + z_day < 0.75 * (s_ck + s_day), (z_ck, z_day, s_ck, s_day)
-
-
 def test_asof_join_matches_reference_semantics(spark):
     trades = spark.createDataFrame(
         [(1, 10, 100.0), (1, 20, 101.0), (2, 15, 50.0), (3, 5, 7.0)],
@@ -368,9 +307,7 @@ def test_jaccard_pairs_pair_grain_matches_posting_form(spark):
     # (same pairs, same 6dp jaccard, same zero-overlap omission) —
     # this is what keeps prior driver attestations of
     # dedup_minhash_near_pairs meaningful across the swap.
-    from aiven_challenge2_cdc_sharing_spark.operators.dedup import (
-        jaccard_pairs_postings,
-    )
+    from tests.references import jaccard_pairs_postings
 
     rows = [
         (1, "alpha beta gamma delta epsilon zeta"),

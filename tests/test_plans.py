@@ -5,14 +5,15 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from aiven_challenge2_cdc_sharing_spark.plans.inspect import (
-    explain_str,
-    has_broadcast_join,
-    has_pushed_filters,
-    scan_read_schema,
-)
+from aiven_challenge2_cdc_sharing_spark.plans.inspect import explain_str
 from aiven_challenge2_cdc_sharing_spark.queries import load_registry
 from aiven_challenge2_cdc_sharing_spark.tables import load_table
+from tests.references import (
+    has_broadcast_join,
+    has_pushed_filters,
+    num_exchanges,
+    scan_read_schema,
+)
 
 
 def test_dimension_joins_broadcast(spark, sf_dir):
@@ -67,8 +68,6 @@ def test_semi_and_anti_join_plans(spark, sf_dir):
 
 
 def test_cdc_snapshot_single_shuffle(spark, sf_dir):
-    from aiven_challenge2_cdc_sharing_spark.plans.inspect import num_exchanges
-
     q = load_registry()["cdc_snapshot"]
     # generator union + unwrap + one window: exactly one exchange per
     # union branch feeding the single row_number shuffle
@@ -121,7 +120,6 @@ def test_ivf_assignment_is_map_only(spark, sf_dir):
         _assign_nearest,
         train_ivf_centroids,
     )
-    from aiven_challenge2_cdc_sharing_spark.plans.inspect import num_exchanges
 
     vectors = load_table(spark, sf_dir, "embeddings")
     cents = train_ivf_centroids(vectors).localCheckpoint(eager=True)

@@ -229,85 +229,6 @@ def test_incremental_near_probe_shape(spark, sf_dir):
     assert plan.count("SortMergeJoin") + plan.count("ShuffledHashJoin") <= 1
 
 
-def test_streaming_dedup_ingest_content_addressed(spark, tmpdir):
-    import json
-
-    from aiven_challenge2_cdc_sharing_spark.streaming import run_dedup_ingest
-
-    in_dir = f"{tmpdir}/in"
-    import os
-
-    os.makedirs(in_dir)
-    # batch 1: three docs, one in-batch duplicate pair (ids 1, 2)
-    with open(f"{in_dir}/b1.json", "w") as f:
-        for r in [
-            {"doc_id": 1, "text": "alpha beta gamma"},
-            {"doc_id": 2, "text": "alpha beta gamma"},
-            {"doc_id": 3, "text": "delta epsilon"},
-        ]:
-            f.write(json.dumps(r) + "\n")
-    q = run_dedup_ingest(
-        spark.readStream.schema("doc_id LONG, text STRING").option(
-            "maxFilesPerTrigger", 1
-        ).json(in_dir),
-        f"{tmpdir}/corpus",
-        f"{tmpdir}/ckpt",
-    )
-    q.awaitTermination(300)
-    # batch 2 (separate run, same checkpoint lineage): one cross-batch
-    # duplicate of doc 3 and one novel doc
-    with open(f"{in_dir}/b2.json", "w") as f:
-        for r in [
-            {"doc_id": 4, "text": "delta epsilon"},
-            {"doc_id": 5, "text": "zeta eta"},
-        ]:
-            f.write(json.dumps(r) + "\n")
-    q = run_dedup_ingest(
-        spark.readStream.schema("doc_id LONG, text STRING").option(
-            "maxFilesPerTrigger", 1
-        ).json(in_dir),
-        f"{tmpdir}/corpus",
-        f"{tmpdir}/ckpt",
-    )
-    q.awaitTermination(300)
-    corpus = spark.read.parquet(f"{tmpdir}/corpus")
-    rows = {(r.doc_id, r.text) for r in corpus.collect()}
-    # in-batch dup resolved to min id; cross-batch dup rejected
-    assert rows == {
-        (1, "alpha beta gamma"),
-        (3, "delta epsilon"),
-        (5, "zeta eta"),
-    }
-    texts = [r.text for r in corpus.collect()]
-    assert len(texts) == len(set(texts))
-
-
-def test_streaming_dedup_ingest_replay_is_noop(spark, tmpdir):
-    import json
-    import os
-    import shutil as sh
-
-    from aiven_challenge2_cdc_sharing_spark.streaming import run_dedup_ingest
-
-    in_dir = f"{tmpdir}/in"
-    os.makedirs(in_dir)
-    with open(f"{in_dir}/b1.json", "w") as f:
-        f.write(json.dumps({"doc_id": 1, "text": "only doc"}) + "\n")
-    for attempt in range(2):
-        # losing the checkpoint between runs forces a full REPLAY of the
-        # input — the at-least-once worst case; content addressing must
-        # make the second pass a no-op
-        sh.rmtree(f"{tmpdir}/ckpt", ignore_errors=True)
-        q = run_dedup_ingest(
-            spark.readStream.schema("doc_id LONG, text STRING").json(in_dir),
-            f"{tmpdir}/corpus",
-            f"{tmpdir}/ckpt",
-        )
-        q.awaitTermination(300)
-    corpus = spark.read.parquet(f"{tmpdir}/corpus")
-    assert corpus.count() == 1
-
-
 def test_matmul_assignment_parity_with_hof(spark, sf_dir):
     # the BLAS fast path must agree with the JVM expression argmin
     # (same centroids, same tiebreak); disagreement is possible only on
@@ -471,87 +392,6 @@ def test_streaming_session_window(spark, tmpdir):
     assert (1, "00:00", 2) in got   # two events merged into one session
     assert (1, "00:20", 1) in got   # gap > 5min opened a new session
     assert (2, "00:01", 1) in got
-
-
-def test_cdc_schema_evolution_union_unwrap_snapshot(spark):
-    from aiven_challenge2_cdc_sharing_spark.cdc import latest_snapshot, unwrap
-    from aiven_challenge2_cdc_sharing_spark.cdc.algebra import (
-        union_evolving_logs,
-    )
-
-    epoch1 = spark.createDataFrame(
-        [
-            ("c", None, (1, "alice"), 10, "customer", 1),
-            ("c", None, (2, "bob"), 11, "customer", 2),
-        ],
-        "op string, before struct<id:int,name:string>, "
-        "after struct<id:int,name:string>, ts_ms long, "
-        "source_table string, seq long",
-    )
-    # epoch 2: ALTER TABLE added `email`; also updates row 1
-    epoch2 = spark.createDataFrame(
-        [
-            ("c", None, (3, "carol", "c@e"), 20, "customer", 3),
-            ("u", (1, "alice", None), (1, "alice", "a@e"), 21, "customer", 4),
-        ],
-        "op string, before struct<id:int,name:string,email:string>, "
-        "after struct<id:int,name:string,email:string>, ts_ms long, "
-        "source_table string, seq long",
-    )
-    snap = latest_snapshot(unwrap(union_evolving_logs(epoch1, epoch2)))
-    rows = {r.id: (r.name, r.email) for r in snap.collect()}
-    assert rows == {
-        1: ("alice", "a@e"),   # updated after the ALTER -> filled
-        2: ("bob", None),      # never touched since -> NULL, like Postgres
-        3: ("carol", "c@e"),   # born with the new column
-    }
-
-
-def test_shared_serving_fanout_matches_batch_path(spark, sf_dir, tmpdir):
-    from aiven_challenge2_cdc_sharing_spark.cdc import (
-        generate_envelope_log,
-        latest_snapshot,
-        unwrap,
-    )
-    from aiven_challenge2_cdc_sharing_spark.streaming import (
-        envelope_file_stream,
-        run_shared_serving,
-    )
-    from aiven_challenge2_cdc_sharing_spark.streaming.runtime import read_table
-
-    log = generate_envelope_log(spark, sf_dir)
-    log.repartition(6).write.mode("overwrite").json(f"{tmpdir}/ev")
-    q = run_shared_serving(
-        envelope_file_stream(spark, f"{tmpdir}/ev"),
-        f"{tmpdir}/serve",
-        f"{tmpdir}/ckpt",
-    )
-    q.awaitTermination(300)
-    expected = latest_snapshot(unwrap(log))
-    exp_counts = {
-        (r.classification, r.cnt)
-        for r in expected.groupBy("classification")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
-    got_counts = {
-        (r.classification, r.cnt)
-        for r in read_table(spark, f"{tmpdir}/serve/counts").collect()
-    }
-    assert got_counts == exp_counts
-    exp_recent = [
-        r.id
-        for r in expected.orderBy(
-            F.desc("created_at"), F.desc("id")
-        ).limit(10).collect()
-    ]
-    got_recent = [
-        r.id
-        for r in read_table(spark, f"{tmpdir}/serve/recent")
-        .orderBy(F.desc("created_at"), F.desc("id"))
-        .collect()
-    ]
-    assert got_recent == exp_recent
 
 
 def test_auc_matches_sklearn_free_reference(spark, sf_dir):

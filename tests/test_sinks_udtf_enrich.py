@@ -1,5 +1,4 @@
-"""Exactly-once sink replay semantics, Python UDTF, streaming
-stream-static enrichment."""
+"""Python UDTF and streaming stream-static enrichment."""
 
 from __future__ import annotations
 
@@ -10,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from aiven_challenge2_cdc_sharing_spark.functions.udtf_ops import register_udtfs
-from aiven_challenge2_cdc_sharing_spark.streaming.sinks import write_once_per_batch
 from aiven_challenge2_cdc_sharing_spark.tables import load_table
 
 
@@ -19,17 +17,6 @@ def tmpdir():
     d = tempfile.mkdtemp(prefix="su_test_")
     yield d
     shutil.rmtree(d, ignore_errors=True)
-
-
-@pytest.mark.parametrize("scheme", ["", "file:"], ids=["plain", "file_uri"])
-def test_write_once_per_batch_skips_replay(spark, sf_dir, tmpdir, scheme):
-    out = f"{scheme}{tmpdir}"
-    df = load_table(spark, sf_dir, "nation")
-    assert write_once_per_batch(df, 7, out) is True
-    first = spark.read.parquet(f"{out}/batch_id=7").count()
-    # crash-recovery replays the same batch — must be a no-op
-    assert write_once_per_batch(df.limit(3), 7, out) is False
-    assert spark.read.parquet(f"{out}/batch_id=7").count() == first == 25
 
 
 def test_udtf_sentence_splitter(spark):

@@ -1,6 +1,6 @@
 """Streaming runtime tests: the same CDC algebra under readStream must
 produce the batch-path snapshot (batch/stream parity), survive replay,
-and support windowed counts + peek."""
+and support peek and the progress heartbeat."""
 
 from __future__ import annotations
 
@@ -24,9 +24,7 @@ from aiven_challenge2_cdc_sharing_spark.streaming import (
     peek_one,
     progress_summary,
     run_snapshot_maintenance,
-    windowed_counts,
 )
-from aiven_challenge2_cdc_sharing_spark.tables import load_table
 
 
 @pytest.fixture()
@@ -193,57 +191,22 @@ def test_stream_crash_mid_run_recovers_from_checkpoint(spark, sf_dir, tmpdir):
     assert rows_set(read_snapshot(spark, snap)) == expected
 
 
-def _stream_vs_batch_windows(spark, sf_dir, tmpdir, slide=None):
-    """``windowed_counts`` over the events table as a batch and as a
-    file stream: (stream rows, batch rows, the finished query)."""
-    events = load_table(spark, sf_dir, "events")
-    events_dir = f"{tmpdir}/ev_json"
-    events.write.mode("overwrite").json(events_dir)
-
-    batch_result = windowed_counts(events, window="1 hour", slide=slide)
-
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 8)
-        .json(events_dir)
-    )
-    q = (
-        windowed_counts(stream, window="1 hour", slide=slide)
-        .writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("complete")
-        .option("checkpointLocation", f"{tmpdir}/win_ckpt")
-        .trigger(availableNow=True)
-        .start()
+def test_progress_summary_names_last_batch(spark, sf_dir, tmpdir):
+    """T7: the liveness summary of a finished snapshot-maintenance query
+    names its last micro-batch."""
+    events_dir = f"{tmpdir}/events"
+    _write_event_json(spark, sf_dir, events_dir)
+    q = run_snapshot_maintenance(
+        envelope_file_stream(spark, events_dir), f"{tmpdir}/snapshot", f"{tmpdir}/ckpt"
     )
     q.awaitTermination(300)
-    got = spark.sql("SELECT win.start AS s, win.end AS e, cnt FROM win_counts")
-    want = batch_result.select(
-        F.col("win.start").alias("s"), F.col("win.end").alias("e"), "cnt"
-    )
-    return rows_set(got), rows_set(want), q
 
-
-def test_stream_windowed_counts_match_batch(spark, sf_dir, tmpdir):
-    got, want, q = _stream_vs_batch_windows(spark, sf_dir, tmpdir)
-    assert got == want
-
-    # T7: the liveness summary of the finished query names its last batch
     summary = progress_summary(q)
     last = q.lastProgress
     assert summary["batchId"] == last["batchId"] == max(p["batchId"] for p in q.recentProgress)
     assert summary["numInputRows"] == last["numInputRows"]
     assert summary["inputRowsPerSecond"] == last["inputRowsPerSecond"]
     assert summary["status"]["isTriggerActive"] is False
-
-
-def test_stream_sliding_windowed_counts_match_batch(spark, sf_dir, tmpdir):
-    """T6: 1-hour windows sliding every 30 minutes (each event counts in
-    two windows) agree between the stream and the batch twin."""
-    got, want, _ = _stream_vs_batch_windows(spark, sf_dir, tmpdir, slide="30 minutes")
-    assert got == want
-    timed = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull()).count()
-    assert sum(int(cnt) for cnt, _, _ in want) == 2 * timed  # rows_set sorts the columns
 
 
 def test_peek_one(spark, sf_dir, tmpdir):

@@ -8,11 +8,9 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from aiven_challenge2_cdc_sharing_spark.cdc import scd2_history
-from aiven_challenge2_cdc_sharing_spark.operators.joins import (
-    binned_range_join,
-    range_join,
-)
+from aiven_challenge2_cdc_sharing_spark.operators.joins import binned_range_join
 from aiven_challenge2_cdc_sharing_spark.queries import load_registry
+from tests.references import range_join, snapshot_at
 
 ENV_SCHEMA = (
     "op string, "
@@ -275,7 +273,6 @@ def test_scd2_agrees_with_point_in_time_snapshot(spark, sf_dir):
     from aiven_challenge2_cdc_sharing_spark.cdc import (
         generate_envelope_log,
         scd2_history,
-        snapshot_at,
         unwrap,
     )
 
