@@ -83,8 +83,8 @@ FROM orders
     doc="Z-order (Morton) layout key over (custkey, order day): the "
     "multi-column data-skipping layout Delta exposes as OPTIMIZE ZORDER "
     "BY, as one codegen'd literal-shift expression both engines compute "
-    "bit-identically; operators/layout.py uses it to range-partition + "
-    "sort so parquet min-max stats stay tight in BOTH dimensions",
+    "bit-identically; a z-ordered write range-partitions and sorts on "
+    "it so parquet min-max stats stay tight in BOTH dimensions",
 )
 def layout_zorder_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.layout import interleave_bits

@@ -308,7 +308,8 @@ GROUP BY 1 ORDER BY 1
     "null) gives every view its next purchase timestamp in a single "
     "pass; the absence test is then a plain filter.  Keyed window "
     "-> parallelism scales with users; streaming twin is an event "
-    "timer per open view (streaming/sessions.py pattern).",
+    "timer per open view that fires when its hour passes with no "
+    "purchase.",
 )
 def cep_absence_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = (

@@ -107,8 +107,8 @@ ORDER BY layout, dim
 """,
     doc="data-skipping effectiveness audit: simulate 256-row files "
     "under two physical layouts — date-sorted (the ingest order) and "
-    "Morton z-order over (custkey, order day), min-max normalized to "
-    "8 bits/dim exactly as operators/layout.zorder_by prescribes — "
+    "Morton z-order over (custkey, order day), each dimension min-max "
+    "normalized to 8 bits before its bits are interleaved — "
     "compute each file's min-max zone map, and replay 4 quartile "
     "range predicates per dimension against the maps.  skip_rate is "
     "THE number an OPTIMIZE ZORDER decision is made on: date-sort "

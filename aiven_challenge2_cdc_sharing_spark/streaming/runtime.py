@@ -34,9 +34,21 @@ from ..cdc.algebra import unwrap
 from ..cdc.materialize import latest_state, merge_state, published_snapshot
 from ..schemas import CDC_ENVELOPE
 
+# Per-trigger admission bound of ``envelope_file_stream``.  Every trigger
+# is one ``merge_snapshot_batch`` (4 jobs and a rewrite of each bucket its
+# keys touch), so the bound should split only a backlog too large for one
+# rewrite, never a small one that the producer wrote as many files.
+_MAX_BYTES_PER_TRIGGER = 256 * 1024 * 1024
+
 
 def envelope_file_stream(spark: SparkSession, events_dir: str) -> DataFrame:
     """T1 — stream of Debezium-style envelope events from JSON files.
+
+    A trigger admits files up to ``_MAX_BYTES_PER_TRIGGER`` bytes of
+    JSON, so its size follows how much data arrived, not how many files
+    carry it; the bound is soft (a trigger takes at least one file).  A
+    backlog below it catches up in one trigger, and a larger one commits
+    in bounded steps, each rewriting the buckets its keys touch.
 
     In production this would be
     ``spark.readStream.format("kafka")... .option("kafka.isolation.level",
@@ -46,7 +58,7 @@ def envelope_file_stream(spark: SparkSession, events_dir: str) -> DataFrame:
     """
     return (
         spark.readStream.schema(CDC_ENVELOPE)
-        .option("maxFilesPerTrigger", 4)
+        .option("maxBytesPerTrigger", _MAX_BYTES_PER_TRIGGER)
         .json(events_dir)
     )
 
@@ -261,6 +273,11 @@ def run_snapshot_maintenance(
     comfortable rewrite unit; a batch of uniformly random keys touches
     every bucket (a full rewrite), but CDC batches are small and
     key-local.
+
+    Every trigger rewrites the buckets it touches, so a catch-up costs
+    about one such rewrite per trigger; the source bounds a trigger by
+    bytes (``envelope_file_stream``), and a backlog below the bound is
+    one trigger.
     """
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         merge_snapshot_batch(batch_df, snapshot_path, N_SNAPSHOT_BUCKETS)
@@ -298,7 +315,9 @@ def peek_one(
 
 def progress_summary(query: StreamingQuery) -> dict:
     """T7 — liveness/lag monitoring (the heartbeat analogue,
-    terraform/main.tf:251)."""
+    terraform/main.tf:251): the last trigger's batch, input and latency
+    (``triggerExecutionMs``), and how many of the recent triggers carried
+    input (``inputBatches``; a catch-up's trigger count)."""
     p = query.lastProgress
     if p is None:
         return {"status": query.status, "batches": 0}
@@ -307,4 +326,6 @@ def progress_summary(query: StreamingQuery) -> dict:
         "batchId": p.get("batchId"),
         "numInputRows": p.get("numInputRows"),
         "inputRowsPerSecond": p.get("inputRowsPerSecond"),
+        "triggerExecutionMs": p.get("durationMs", {}).get("triggerExecution"),
+        "inputBatches": sum(1 for r in query.recentProgress if r.get("numInputRows", 0) > 0),
     }

@@ -2,17 +2,13 @@
 
 from __future__ import annotations
 
-import sys
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from aiven_challenge2_cdc_sharing_spark.plans.inspect import (  # noqa: E402
+from aiven_challenge2_cdc_sharing_spark.plans.inspect import (
     explain_str,
 )
-from aiven_challenge2_cdc_sharing_spark.queries import (  # noqa: E402
+from aiven_challenge2_cdc_sharing_spark.queries import (
     load_registry,
 )
 

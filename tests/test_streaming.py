@@ -193,7 +193,8 @@ def test_stream_crash_mid_run_recovers_from_checkpoint(spark, sf_dir, tmpdir):
 
 def test_progress_summary_names_last_batch(spark, sf_dir, tmpdir):
     """T7: the liveness summary of a finished snapshot-maintenance query
-    names its last micro-batch."""
+    names its last micro-batch, that trigger's latency and how many
+    triggers carried input."""
     events_dir = f"{tmpdir}/events"
     _write_event_json(spark, sf_dir, events_dir)
     q = run_snapshot_maintenance(
@@ -206,7 +207,26 @@ def test_progress_summary_names_last_batch(spark, sf_dir, tmpdir):
     assert summary["batchId"] == last["batchId"] == max(p["batchId"] for p in q.recentProgress)
     assert summary["numInputRows"] == last["numInputRows"]
     assert summary["inputRowsPerSecond"] == last["inputRowsPerSecond"]
+    assert summary["triggerExecutionMs"] == last["durationMs"]["triggerExecution"] > 0
+    assert summary["inputBatches"] == sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
     assert summary["status"]["isTriggerActive"] is False
+
+
+def test_backlog_of_many_files_catches_up_in_one_trigger(spark, sf_dir, tmpdir):
+    """A backlog is admitted by bytes, not by file count: the log written
+    as 12 JSON files catches up in one trigger that carries input, and
+    the snapshot equals the batch path's."""
+    events_dir = f"{tmpdir}/events"
+    log = _write_event_json(spark, sf_dir, events_dir, partitions=12)
+    assert len(glob.glob(f"{events_dir}/*.json")) == 12
+    q = run_snapshot_maintenance(
+        envelope_file_stream(spark, events_dir), f"{tmpdir}/snapshot", f"{tmpdir}/ckpt"
+    )
+    q.awaitTermination(300)
+
+    assert sum(1 for p in q.recentProgress if p["numInputRows"] > 0) == 1
+    got = read_snapshot(spark, f"{tmpdir}/snapshot")
+    assert rows_set(got) == rows_set(latest_snapshot(unwrap(log)))
 
 
 def test_peek_one(spark, sf_dir, tmpdir):
